@@ -43,6 +43,12 @@ Design rules:
   the arithmetic is the same expression shapes the long paths use —
   every tiled op shares its DuckDB oracle with the long-format row it
   mirrors (plus a composed end-to-end row, ``tiled_pipeline_e2e``).
+- **One physical engine per operator, at every tile size.** The folds
+  (time/band/period reducers, spatial-axis reducers, resample, zonal,
+  the pack itself) run numpy over Arrow batches; the band-expression
+  reducer runs one Catalyst ``transform``. No dispatch on tile size,
+  so the gate's small fixture tiles exercise the same plan nodes as
+  production's 64–256 px tiles.
 
 Assumes non-negative pixel indices (the grid origin is the scene
 corner — true for every loader in this repo); coordinates left/above
@@ -196,6 +202,34 @@ def _widen_py(tc: "TiledCube", df: DataFrame, keys: list[str]) -> DataFrame:
     return df.repartition(w, *[F.col(k) for k in keys])
 
 
+# Smallest pixel edge one pandas call of a tile-keyed group stage
+# covers. A groupBy().applyInPandas call pays ~7 ms of core time in
+# Arrow/pandas set-up per group, which at the gate's 4-8 px tiles
+# dwarfs the numpy work (measured on 4 cores: a time-mean of a
+# 128x128x24 px, 3-band cube at tile 8 took 2.9 s with one tile per
+# group, 0.67 s batched). Tiles below this edge are therefore grouped
+# k x k per call; tiles at or above it keep one group each, so their
+# plans are unchanged.
+_GROUP_EDGE = 64
+
+
+def _tile_groups(
+    df: DataFrame, tile: int, keys: list[str]
+) -> tuple[DataFrame, list[str]]:
+    """The group keys of a tile-keyed pandas stage: ``keys`` plus the
+    tile position, with tiles smaller than :data:`_GROUP_EDGE` batched
+    k x k into one group (``_gr``/``_gc`` label the batch; the UDF
+    still sees ``tile_row``/``tile_col`` per row)."""
+    k = max(1, _GROUP_EDGE // tile)
+    if k == 1:
+        return df, [*keys, "tile_row", "tile_col"]
+    df = df.withColumns({
+        "_gr": (F.col("tile_row") / k).cast("int"),
+        "_gc": (F.col("tile_col") / k).cast("int"),
+    })
+    return df, [*keys, "_gr", "_gc"]
+
+
 def materialize_tiled(tc: "TiledCube") -> "TiledCube":
     """Evaluate a tiled cube's lineage once and reuse the rows across
     several consumers (round-15 optimization, guide §3.3/§5): sweep
@@ -227,24 +261,6 @@ def _widen_df(tc: "TiledCube", df: DataFrame, keys: list[str]) -> DataFrame:
     return df.repartition(w, *[F.col(k) for k in keys])
 
 
-def _widened(tc: "TiledCube", keys: list[str]) -> DataFrame:
-    """The fold input, pre-clustered on the group keys at the raster-
-    aware width (no-op under the oracle guard). HashPartitioning(keys,
-    w) satisfies the downstream groupBy/applyInPandas ClusteredDistribution,
-    so this REPLACES the default exchange instead of adding one.
-
-    Round-15 continuation, measured NEGATIVE recorded: extending the
-    pandas-stage parallelism floor here (and to the sql pack) was
-    interleaved-A/B'd and REGRESSED the sql-fold consumers at bench
-    scale (tiled_zonal_sweep 0.78, tiled_climatological_normal 0.84,
-    tiled_pipeline_e2e 0.56 old/new) — tiny JVM HOF groups pay more in
-    task/scheduling overhead than the serialization they avoid. The
-    floor stays restricted to applyInPandas stages (``_widen_py``),
-    whose per-group PYTHON cost is what byte-based AQE cannot see;
-    the numpy fold/median engines take it at their call sites."""
-    return _widen_df(tc, tc.df, keys)
-
-
 def _widened_join_sides(
     big: "TiledCube", big_df: DataFrame, other_df: DataFrame,
     keys: list[str],
@@ -253,7 +269,7 @@ def _widened_join_sides(
     raster-aware width (mask, band zip, merge resolver — the joins the
     round-13 heap telemetry shows carrying whole-raster arrays through
     the 32-partition default at 100×). Same oracle guard as
-    :func:`_widened`: no-op unless the BIG side's payload demands more
+    :func:`_widen_df`: no-op unless the BIG side's payload demands more
     than the session default; when it does, HashPartitioning(keys, w)
     on both sides satisfies the join's distribution requirement, so
     the two repartitions REPLACE the join's own exchanges."""
@@ -285,44 +301,34 @@ def to_tiled(
     tile: int = 256,
     n_y: int | None = None,
     n_x: int | None = None,
-    impl: str = "auto",
 ) -> TiledCube:
-    """Long → tiled: one aggregation keyed by (band, time, tile_row,
-    tile_col); each group assembles its dense row-major pixel array via
-    a position map (missing / nodata cells stay NULL). Scene dims are
-    probed with one tiny max-index aggregate when not supplied (pass
-    them to keep the plan action-free — sources that know their grid
-    statically should).
-
-    Two physical engines behind one semantics (the ``assign_impl``
-    dispatch pattern): ``"sql"`` — collect_list + array_sort + a
-    gap-filling HOF fold, engine-exact and oracle-mode for small tiles
-    — and ``"numpy"`` — Arrow-batched ``applyInPandas`` position
-    scatter per tile group, the scale path (the round-12 probe
-    measured the interpreted per-element HOF at ~200k cells/s/32cores:
-    63 s to pack 12.6 M cells that the scatter does in ~2 s). ``auto``
-    picks numpy at/above ``TILE_VECTORIZE_CELLS`` (gate fixtures at
-    tile ≤ 8 stay on the sql path their oracles pin).
+    """Long → tiled: one grouping keyed by (band, time, tile_row,
+    tile_col) gathers each tile's (position, value) pairs in the JVM
+    (``collect_list``), then an Arrow-batched ``mapInPandas`` scatters
+    a whole batch of tiles into dense row-major pixel arrays at once
+    (missing / nodata cells stay NULL). Scene dims are probed with one
+    tiny max-index aggregate when not supplied (pass them to keep the
+    plan action-free — sources that know their grid statically
+    should).
 
     **Tiled-boundary convention (round 13)**: the packed array's ONLY
     missing-value representation is NULL — a float NaN input VALUE
-    folds to NULL on pack in BOTH engines (the Arrow float64 transfer
-    the numpy engine rides cannot distinguish them, so the sql engine
-    folds explicitly to match; fragment shuffles already round-trip
-    NULL↔NaN the same way). With that convention the engines are
-    bit-exact on every packable input. Both raise on duplicate pixel
-    keys with the SAME message, though the exception class differs
-    (Python ``ValueError`` from the pandas scatter vs Spark's
-    ``raise_error`` runtime exception from the HOF).
+    folds to NULL on pack (the Arrow float64 transfer cannot
+    distinguish them; fragment shuffles round-trip NULL↔NaN the same
+    way). Duplicate pixel keys within a tile raise a named
+    ``ValueError`` instead of silently mis-positioning pixels.
 
     Scale shape: the groupBy is the ONLY exchange, its key count is
     pixels/tile² (e.g. 10^12 px → 15 M rows at tile=256), and each
     group's state is one fixed-size array — no skew (every tile has
-    exactly tile² candidate cells)."""
+    exactly tile² candidate cells). The scatter is a batch stage, not
+    a per-group one: a pandas call per tile group costs ~7 ms of core
+    time, which made a per-group pack of a 128×128×24 px, 3-band cube
+    at tile 8 (18,432 groups) 12× slower than at tile 64."""
+    import numpy as np
+
     if tile < 1:
         raise ValueError(f"tile must be >= 1, got {tile}")
-    if impl == "auto":
-        impl = "numpy" if tile * tile >= TILE_VECTORIZE_CELLS else "sql"
     x_idx, y_idx = _indices(cube)
     if n_y is None or n_x is None:
         ext = cube.df.agg(
@@ -331,94 +337,57 @@ def to_tiled(
         n_y = int(ext.ny) if n_y is None else n_y
         n_x = int(ext.nx) if n_x is None else n_x
     keys = [d for d in (BAND, TIME) if d in cube.schema.dims]
+    gkeys = [*keys, "tile_row", "tile_col"]
     pos = ((y_idx % tile) * tile + (x_idx % tile)).cast("int")
     staged = cube.df.select(
         *keys,
         (y_idx / tile).cast("int").alias("tile_row"),
         (x_idx / tile).cast("int").alias("tile_col"),
-        pos.alias("_pos"),
-        VALUE,
+        # one struct keeps a NULL value aligned with its position
+        F.struct(pos.alias("p"), F.col(VALUE).alias("v")).alias("_pv"),
     )
-    # Dense-array assembly in O(tile²): sort the collected (pos, value)
-    # entries once, then emit each entry preceded by NULL filler for the
-    # gap since the previous position (+ trailing filler) — missing
-    # cells become NULL padding. A map_from_entries + element_at lookup
-    # is the "obvious" spelling but Spark's ArrayBasedMapData lookup is
-    # O(n), making the tile O(tile⁴) — 4.3e9 comparisons per 256-tile
-    # (measured: hung the bench). LET idiom binds the sorted entries
-    # once (interpreted HOFs get no CSE).
+    # byte-sized pre-clustering at scale only; it replaces the
+    # aggregate's own exchange
+    _w_handle = TiledCube(staged, cube.schema, tile, n_y, n_x)
+    gathered = (
+        _widen_df(_w_handle, staged, gkeys)
+        .groupBy(*gkeys)
+        .agg(F.collect_list("_pv").alias("_pv"))
+        .select(*gkeys, F.col("_pv.p").alias("_p"),
+                F.col("_pv.v").alias("_v"))
+    )
     T2 = tile * tile
-    # the trailing size check turns a malformed input (duplicate
-    # (band, time, y, x) pixel rows — a negative gap collapses to an
-    # empty filler and the array silently mis-positions every later
-    # pixel) into a NAMED executor error instead of corrupt tiles
-    assemble = (
-        "transform(transform(array(array_sort(collect_list(struct(_pos, value)))), "
-        "es -> concat("
-        "  flatten(transform(sequence(0, size(es) - 1), k -> concat("
-        "    array_repeat(CAST(NULL AS DOUBLE), "
-        "      es[k]._pos - CASE WHEN k = 0 THEN -1 "
-        "      ELSE es[k - 1]._pos END - 1), "
-        "    array(CASE WHEN isnan(es[k].value) THEN CAST(NULL AS DOUBLE) "
-        "      ELSE es[k].value END)))), "
-        f"  array_repeat(CAST(NULL AS DOUBLE), "
-        f"    {T2} - 1 - es[size(es) - 1]._pos))), "
-        f"d -> CASE WHEN size(d) = {T2} THEN d ELSE "
-        "raise_error('to_tiled: duplicate pixel keys within a tile "
-        "(one row per (band, time, y, x) required)') END)[0]"
-    )
-    if impl == "numpy":
-        import numpy as np
-        import pandas as pd
 
-        T2n = tile * tile
-        gkeys = [*keys, "tile_row", "tile_col"]
-
-        def scatter(pdf: "pd.DataFrame") -> "pd.DataFrame":
-            pos = pdf["_pos"].to_numpy()
-            if len(np.unique(pos)) != len(pos):
+    def scatter(batches):
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            n = len(pdf)
+            ps = pdf["_p"].to_numpy()
+            lens = np.fromiter(map(len, ps), dtype="int64", count=n)
+            flat = np.repeat(np.arange(n, dtype="int64") * T2, lens)
+            flat += np.concatenate(ps)
+            if np.unique(flat).size != flat.size:
                 raise ValueError(
                     "to_tiled: duplicate pixel keys within a tile "
                     "(one row per (band, time, y, x) required)"
                 )
-            arr = np.full(T2n, np.nan)
-            arr[pos] = pdf[VALUE].to_numpy(dtype="float64")
-            obj = arr.astype(object)
-            obj[np.isnan(arr)] = None
-            row0 = pdf.iloc[0]
-            rec = {
-                c: [int(row0[c]) if c in ("tile_row", "tile_col")
-                    else row0[c]]
-                for c in gkeys
-            }
-            rec["data"] = [obj.tolist()]
-            return pd.DataFrame(rec)
+            arr = np.full((n, T2), np.nan)
+            # NULL values arrive as NaN and leave as NULL (Arrow's
+            # pandas semantics)
+            arr.reshape(-1)[flat] = np.concatenate(
+                pdf["_v"].to_numpy()
+            ).astype("float64")
+            out = pdf[gkeys].copy()
+            out["data"] = list(arr)
+            yield out
 
-        out_fields = ", ".join(
-            f"{c} {cube.df.schema[c].dataType.simpleString()}"
-            if c in keys else f"{c} int"
-            for c in gkeys
-        )
-        # round-15 continuation (guide §2.2/§4): the numpy pack is
-        # per-GROUP Python work invisible to byte-based AQE
-        # coalescing; pre-cluster at the pandas-stage width. The
-        # scatter is position-keyed (order-free), so the repartition
-        # cannot move a value. The sql branch deliberately stays
-        # unfloored — measured negative, see _widened's docstring.
-        _w_handle = TiledCube(staged, cube.schema, tile, n_y, n_x)
-        df = _widen_py(_w_handle, staged, gkeys).groupBy(
-            *gkeys
-        ).applyInPandas(
-            scatter, f"{out_fields}, data array<double>"
-        )
-        return TiledCube(df, cube.schema, tile, n_y, n_x)
-    # sql pack branch: NO parallelism floor — measured negative, see
-    # _widened's docstring (tiny JVM HOF groups; the floor regressed
-    # the sweep/e2e rows at bench scale)
-    df = (
-        staged.groupBy(*keys, "tile_row", "tile_col")
-        .agg(F.expr(assemble).alias("data"))
+    out_fields = ", ".join(
+        f"{c} {cube.df.schema[c].dataType.simpleString()}"
+        if c in keys else f"{c} int"
+        for c in gkeys
     )
+    df = gathered.mapInPandas(scatter, f"{out_fields}, data array<double>")
     return TiledCube(df, cube.schema, tile, n_y, n_x)
 
 
@@ -463,65 +432,15 @@ def from_tiled(tc: TiledCube) -> Cube:
     return Cube(df, tc.schema)
 
 
-def reduce_time_mean_tiled(tc: TiledCube, impl: str = "auto") -> TiledCube:
+def reduce_time_mean_tiled(tc: TiledCube) -> TiledCube:
     """Mean over the time axis natively on tiles — see
     :func:`reduce_time_tiled` (this is its ``reducer="mean"`` form,
-    kept as the named op the gate row pins).
-
-    Two physical engines behind the same semantics (the
-    ``assign_impl`` dispatch pattern):
-
-    - ``"sql"`` — a time-sorted element-wise sum+count fold in pure SQL
-      higher-order functions. Engine-exact (the oracle-mode gate row
-      pins it at tile=8), but interpreted lambdas cost ~µs per element
-      — fine for small tiles, wrong for 256² arrays (measured: the SQL
-      fold LOST to the long-format codegen avg, 5.8 s vs 3.6 s on
-      9.4 M px).
-    - ``"numpy"`` — Arrow-batched ``applyInPandas`` per tile group:
-      stack the group's arrays, one vectorized nansum/count. The scale
-      path. Same ulp caveat as `assign_nearest_centroid_vectorized`
-      (numpy's pairwise sums vs sequential folds); exact on dyadic
-      inputs, pinned ≡ sql on the fixture by pytest.
-    - ``"auto"`` (default): numpy at/above ``TILE_VECTORIZE_CELLS``
-      cells per tile, sql below.
-
-    Scale shape vs the long reducer: the same single exchange, but
-    keyed by tile (tile²× fewer, perfectly uniform keys) and carrying
-    packed arrays instead of per-pixel rows; group state is bounded by
-    n_times · tile² doubles (24×256² ≈ 12 MB — sized so a tile-group
-    fits comfortably in an executor task)."""
-    return reduce_time_tiled(tc, "mean", impl=impl)
-
-
-TILE_VECTORIZE_CELLS = 4096  # auto dispatch: sql fold below, numpy at/above
-
-# per-reducer pieces of the sorted element-wise SQL fold: the merge
-# lambda (null elements skipped) and the finisher combining the value
-# fold `s` with the non-null count fold `c` (all-NULL positions → NULL)
-_TILE_SQL_REDUCERS = {
-    "mean": (
-        "(a, v) -> a + coalesce(v, CAST(0.0 AS DOUBLE))",
-        "CASE WHEN c = 0 THEN NULL ELSE s / c END",
-    ),
-    "sum": (
-        "(a, v) -> a + coalesce(v, CAST(0.0 AS DOUBLE))",
-        "CASE WHEN c = 0 THEN NULL ELSE s END",
-    ),
-    "min": (
-        "(a, v) -> CASE WHEN v IS NULL THEN a WHEN a IS NULL THEN v "
-        "WHEN v < a THEN v ELSE a END",
-        "s",
-    ),
-    "max": (
-        "(a, v) -> CASE WHEN v IS NULL THEN a WHEN a IS NULL THEN v "
-        "WHEN v > a THEN v ELSE a END",
-        "s",
-    ),
-}
+    kept as the named op the gate row pins)."""
+    return reduce_time_tiled(tc, "mean")
 
 
 def aggregate_temporal_period_tiled(
-    tc: TiledCube, period: str, reducer: str = "mean", impl: str = "auto"
+    tc: TiledCube, period: str, reducer: str = "mean"
 ) -> TiledCube:
     """Calendar-period resample natively on tiles (the long
     ``aggregate_temporal_period`` on the packed layout): date_trunc
@@ -531,9 +450,8 @@ def aggregate_temporal_period_tiled(
     (band, period, tile): periods multiply the key count but divide
     the per-group state, so the bound on group memory only improves.
 
-    Engines and NULL semantics are exactly :func:`reduce_time_tiled`'s
-    (sql oracle mode / numpy scale path under the auto dispatch);
-    period names and time-metadata handling mirror the long operator
+    NULL semantics are exactly :func:`reduce_time_tiled`'s; period
+    names and time-metadata handling mirror the long operator
     (stale extent dropped; a known input axis maps to its truncation
     image)."""
     from ..operators.aggregates import _PERIODS, _py_trunc
@@ -554,15 +472,13 @@ def aggregate_temporal_period_tiled(
     )
     if reducer == "median":
         # the reduce_time_median_tiled multiset path keyed by the
-        # truncated timestamp (numpy-only engine — see its docstring)
+        # truncated timestamp
         band = [BAND] if BAND in tc.schema.dims else []
         out = _median_groups(
             relabeled, [*band, TIME, "tile_row", "tile_col"]
         )
     else:
-        out = _fold_time_groups(
-            relabeled, reducer, impl, extra_keys=[TIME]
-        )
+        out = _fold_time_groups(relabeled, reducer, extra_keys=[TIME])
     schema = tc.schema.with_time_extent(None)
     if tc.schema.time_axis is not None:
         schema = schema.with_time_axis(
@@ -572,7 +488,7 @@ def aggregate_temporal_period_tiled(
 
 
 def climatological_normal_tiled(
-    tc: TiledCube, frequency: str = "monthly", impl: str = "auto"
+    tc: TiledCube, frequency: str = "monthly"
 ) -> TiledCube:
     """The long ``climatological_normal`` (reference
     ``openeo_odc_driver.py:1354-1373``: groupby('time.month') mean)
@@ -581,9 +497,8 @@ def climatological_normal_tiled(
     timestamp. One exchange keyed by (band, month, tile); the time
     dimension is replaced by a ``month`` column (1..12) riding on the
     tile rows, which :func:`from_tiled` passes through to the long
-    rows exactly like the long operator emits it. Engines and NULL
-    semantics are :func:`reduce_time_tiled`'s (sql oracle mode / numpy
-    scale path)."""
+    rows exactly like the long operator emits it. NULL semantics are
+    :func:`reduce_time_tiled`'s."""
     if frequency != "monthly":
         raise ValueError("only frequency='monthly' supported (as reference)")
     if TIME not in tc.schema.dims:
@@ -594,37 +509,23 @@ def climatological_normal_tiled(
         tc.schema, tc.tile, tc.n_y, tc.n_x,
     )
     out = _fold_groups(
-        labeled, "mean", impl,
+        labeled, "mean",
         keys=[*band, "month", "tile_row", "tile_col"],
         sort_field=TIME,
     )
     return TiledCube(out, tc.schema.drop(TIME), tc.tile, tc.n_y, tc.n_x)
 
 
-def reduce_time_tiled(
-    tc: TiledCube, reducer: str = "mean", impl: str = "auto"
-) -> TiledCube:
-    """Reduce the time axis natively on tiles — mean / sum / min / max
-    with the long reducer's NULL semantics (NULL elements skipped,
-    all-NULL positions stay NULL).
+def reduce_time_tiled(tc: TiledCube, reducer: str = "mean") -> TiledCube:
+    """Reduce the time axis natively on tiles — mean / sum / min / max /
+    sd / variance with the long reducer's NULL semantics (NULL elements
+    skipped, all-NULL positions stay NULL).
 
-    Two physical engines behind the same semantics (the
-    ``assign_impl`` dispatch pattern):
-
-    - ``"sql"`` — a time-sorted element-wise fold in pure SQL
-      higher-order functions. Engine-exact (the oracle-mode gate rows
-      pin it at tile=8), but interpreted lambdas cost ~µs per element
-      — fine for small tiles, wrong for 256² arrays (measured: the SQL
-      fold LOST to the long-format codegen avg, 5.8 s vs 3.6 s on
-      9.4 M px).
-    - ``"numpy"`` — Arrow-batched ``applyInPandas`` per tile group:
-      stack the group's arrays, one vectorized nan-reduction. The
-      scale path. Same ulp caveat as
-      `assign_nearest_centroid_vectorized` for mean/sum (numpy's
-      pairwise sums vs sequential folds — exact on dyadic inputs,
-      irrelevant for min/max); pinned ≡ sql on the fixture by pytest.
-    - ``"auto"`` (default): numpy at/above ``TILE_VECTORIZE_CELLS``
-      cells per tile, sql below.
+    Engine: Arrow-batched ``applyInPandas`` per tile group (k×k tiles
+    per group under 64 px, :func:`_tile_groups`) — stack each tile's
+    arrays sorted by time, one vectorized nan-reduction along the
+    stack (:func:`_fold_groups`). The sort makes mean/sum
+    independent of how upstream rows are partitioned.
 
     Scale shape vs the long reducer: the same single exchange, but
     keyed by tile (tile²× fewer, perfectly uniform keys) and carrying
@@ -633,15 +534,13 @@ def reduce_time_tiled(
     fits comfortably in an executor task)."""
     if TIME not in tc.schema.dims:
         raise ValueError("reduce_time_tiled needs a time dimension")
-    df = _fold_time_groups(tc, reducer, impl, extra_keys=[])
+    df = _fold_time_groups(tc, reducer, extra_keys=[])
     return TiledCube(
         df, tc.schema.drop(TIME), tc.tile, tc.n_y, tc.n_x
     )
 
 
-def reduce_bands_tiled(
-    tc: TiledCube, reducer: str = "mean", impl: str = "auto"
-) -> TiledCube:
+def reduce_bands_tiled(tc: TiledCube, reducer: str = "mean") -> TiledCube:
     """Reduce the BAND axis natively on tiles — the other long-format
     reducer dimension (``reduce_dimension(dim='bands')``): the same
     element-wise fold as :func:`reduce_time_tiled`, grouped by
@@ -651,7 +550,7 @@ def reduce_bands_tiled(
         raise ValueError("reduce_bands_tiled needs a band dimension")
     keys = [d for d in (TIME,) if d in tc.schema.dims]
     df = _fold_groups(
-        tc, reducer, impl, keys=[*keys, "tile_row", "tile_col"],
+        tc, reducer, keys=[*keys, "tile_row", "tile_col"],
         sort_field=BAND,
     )
     return TiledCube(
@@ -806,9 +705,7 @@ _SPATIAL_REDUCERS = ("mean", "sum", "min", "max", "count", "sd", "variance")
 _SPATIAL_MULTISET = ("median", "product")
 
 
-def reduce_spatial_tiled(
-    tc: TiledCube, dim: str, reducer: str, impl: str = "auto"
-) -> Cube:
+def reduce_spatial_tiled(tc: TiledCube, dim: str, reducer: str) -> Cube:
     """Reduce a SPATIAL axis (x or y) natively on tiles — the last
     reducer dimension without a tile path (reference reduces over x/y
     too, ``openeo_odc_driver.py:728-733``; long twin
@@ -820,6 +717,7 @@ def reduce_spatial_tiled(
 
     1. **Scan-fused line partials** (zero exchange): each tile folds its
        reduced axis to T per-line partials ``(Σ, Σx², n, min, max)`` —
+       vectorized numpy axis reductions in one ``mapInPandas`` pass;
        the raster drops T× BEFORE anything shuffles.
     2. **One exchange of line-partial rows** keyed by
        (band[, time], kept index): key count is raster/n_reduced_axis,
@@ -830,12 +728,9 @@ def reduce_spatial_tiled(
     hash-aggregate — the fold here is per-tile arithmetic instead of a
     T²-row hash probe per tile.
 
-    Engines (the :func:`reduce_time_tiled` dispatch pattern): ``"sql"``
-    — HOF folds, the pinned oracle mode; ``"numpy"`` — vectorized axis
-    reductions per tile, the scale path; ``"auto"`` by
-    ``TILE_VECTORIZE_CELLS``. NULL semantics match the long reducers
-    (NULLs skipped; empty lines → NULL value rows, the long groupBy's
-    behavior on all-NULL lines of a dense cube).
+    NULL semantics match the long reducers (NULLs skipped; empty lines
+    → NULL value rows, the long groupBy's behavior on all-NULL lines of
+    a dense cube).
 
     ``median``/``product`` need the line MULTISET: stage 1 emits each
     line's non-NULL values as a compact array (NULL stripping shrinks
@@ -853,97 +748,59 @@ def reduce_spatial_tiled(
     g = tc.schema.grid
     if g is None:
         raise ValueError("reduce_spatial_tiled needs a GridSpec")
-    T = tc.tile
-    T2 = T * T
-    keys = tc.key_dims
-    if impl == "auto":
-        impl = "numpy" if T2 >= TILE_VECTORIZE_CELLS else "sql"
     if reducer in _SPATIAL_MULTISET:
-        return _reduce_spatial_multiset(tc, dim, reducer, impl)
+        return _reduce_spatial_multiset(tc, dim, reducer)
+    import numpy as np
+    import pandas as pd
+    from typing import Iterator
 
-    if impl == "sql":
-        # per-line element gather: reducing x folds each ROW slice;
-        # reducing y gathers each COLUMN by strided indexing
-        line_vals = (
-            f"slice(data, r * {T} + 1, {T})" if dim == X
-            else f"transform(sequence(0, {T - 1}), q -> data[q * {T} + r])"
-        )
-        fold = (
-            f"transform(sequence(0, {T - 1}), r -> aggregate({line_vals}, "
-            "named_struct("
-            "'s', CAST(0.0 AS DOUBLE), 'ss', CAST(0.0 AS DOUBLE), "
-            "'c', CAST(0 AS BIGINT), "
-            "'mn', CAST(NULL AS DOUBLE), 'mx', CAST(NULL AS DOUBLE)), "
-            "(acc, v) -> CASE WHEN v IS NULL THEN acc ELSE named_struct("
-            "'s', acc.s + v, 'ss', acc.ss + v * v, 'c', acc.c + 1, "
-            "'mn', CASE WHEN acc.mn IS NULL OR v < acc.mn THEN v "
-            "ELSE acc.mn END, "
-            "'mx', CASE WHEN acc.mx IS NULL OR v > acc.mx THEN v "
-            "ELSE acc.mx END) END))"
-        )
-        lines = tc.df.select(
-            *keys, "tile_row", "tile_col",
-            F.posexplode(F.expr(fold)).alias("_lp", "_p"),
-        ).select(
-            *keys, "tile_row", "tile_col", "_lp",
-            F.col("_p.s").alias("_s"), F.col("_p.ss").alias("_ss"),
-            F.col("_p.c").alias("_c"),
-            F.col("_p.mn").alias("_mn"), F.col("_p.mx").alias("_mx"),
-        )
-    elif impl == "numpy":
-        import numpy as np
-        import pandas as pd
-        from typing import Iterator
+    T = tc.tile
+    keys = tc.key_dims
+    axis = 1 if dim == X else 0
+    key_fields = ", ".join(
+        f"{k} {tc.df.schema[k].dataType.simpleString()}" for k in keys
+    )
+    out_schema = (
+        (f"{key_fields}, " if keys else "")
+        + "tile_row int, tile_col int, _lp int, _s double, _ss double, "
+        "_c bigint, _mn double, _mx double"
+    )
 
-        axis = 1 if dim == X else 0
-        key_fields = ", ".join(
-            f"{k} {tc.df.schema[k].dataType.simpleString()}" for k in keys
-        )
-        out_schema = (
-            (f"{key_fields}, " if keys else "")
-            + "tile_row int, tile_col int, _lp int, _s double, _ss double, "
-            "_c bigint, _mn double, _mx double"
-        )
+    def partials(
+        batches: "Iterator[pd.DataFrame]",
+    ) -> "Iterator[pd.DataFrame]":
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            out = []
+            for row in pdf.itertuples(index=False):
+                rec = row._asdict()
+                a = np.asarray(rec["data"], dtype="float64").reshape(T, T)
+                nan = np.isnan(a)
+                c = (~nan).sum(axis=axis)
+                s = np.nansum(a, axis=axis)
+                ss = np.nansum(a * a, axis=axis)
+                empty = c == 0
+                safe = np.where(
+                    (empty[:, None] if axis == 1 else empty[None, :]),
+                    0.0, a,
+                )
+                mn = np.nanmin(safe, axis=axis)
+                mx = np.nanmax(safe, axis=axis)
+                base = {k: rec[k] for k in keys}
+                base["tile_row"] = int(rec["tile_row"])
+                base["tile_col"] = int(rec["tile_col"])
+                for lp in range(T):
+                    out.append({
+                        **base, "_lp": lp,
+                        "_s": float(s[lp]), "_ss": float(ss[lp]),
+                        "_c": int(c[lp]),
+                        "_mn": None if empty[lp] else float(mn[lp]),
+                        "_mx": None if empty[lp] else float(mx[lp]),
+                    })
+            yield pd.DataFrame(out)
 
-        def partials(
-            batches: "Iterator[pd.DataFrame]",
-        ) -> "Iterator[pd.DataFrame]":
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                out = []
-                for row in pdf.itertuples(index=False):
-                    rec = row._asdict()
-                    a = np.asarray(rec["data"], dtype="float64").reshape(T, T)
-                    nan = np.isnan(a)
-                    c = (~nan).sum(axis=axis)
-                    s = np.nansum(a, axis=axis)
-                    ss = np.nansum(a * a, axis=axis)
-                    empty = c == 0
-                    safe = np.where(
-                        (empty[:, None] if axis == 1 else empty[None, :]),
-                        0.0, a,
-                    )
-                    mn = np.nanmin(safe, axis=axis)
-                    mx = np.nanmax(safe, axis=axis)
-                    base = {k: rec[k] for k in keys}
-                    base["tile_row"] = int(rec["tile_row"])
-                    base["tile_col"] = int(rec["tile_col"])
-                    for lp in range(T):
-                        out.append({
-                            **base, "_lp": lp,
-                            "_s": float(s[lp]), "_ss": float(ss[lp]),
-                            "_c": int(c[lp]),
-                            "_mn": None if empty[lp] else float(mn[lp]),
-                            "_mx": None if empty[lp] else float(mx[lp]),
-                        })
-                yield pd.DataFrame(out)
-
-        lines = tc.df.mapInPandas(partials, out_schema)
-    else:
-        raise ValueError(
-            f"impl must be 'auto', 'sql' or 'numpy', got {impl!r}"
-        )
+    lines = tc.df.mapInPandas(partials, out_schema)
 
     if dim == X:
         idx = F.col("tile_row").cast("long") * T + F.col("_lp")
@@ -983,68 +840,52 @@ def _partial_finish(reducer: str):
     }[reducer]
 
 
-def _spatial_line_values(tc: TiledCube, dim: str, impl: str):
+def _spatial_line_values(tc: TiledCube, dim: str):
     """Stage 1 of the spatial-axis multiset path: per-line non-NULL
     value arrays out of each tile, rows
-    ``(*keys, tile_row, tile_col, _lp, _vals)`` — sql HOF filter
-    (oracle mode) or numpy (scale path). NULL stripping shrinks the
-    line-keyed exchange below per-pixel keyed rows."""
+    ``(*keys, tile_row, tile_col, _lp, _vals)``. NULL stripping shrinks
+    the line-keyed exchange below per-pixel keyed rows."""
+    import numpy as np
+    import pandas as pd
+    from typing import Iterator
+
     T = tc.tile
     keys = tc.key_dims
-    if impl == "sql":
-        line_vals = (
-            f"slice(data, r * {T} + 1, {T})" if dim == X
-            else f"transform(sequence(0, {T - 1}), q -> data[q * {T} + r])"
-        )
-        vals = (
-            f"transform(sequence(0, {T - 1}), "
-            f"r -> filter({line_vals}, v -> v IS NOT NULL))"
-        )
-        return tc.df.select(
-            *keys, "tile_row", "tile_col",
-            F.posexplode(F.expr(vals)).alias("_lp", "_vals"),
-        )
-    if impl == "numpy":
-        import numpy as np
-        import pandas as pd
-        from typing import Iterator
+    axis = 1 if dim == X else 0
+    key_fields = ", ".join(
+        f"{k} {tc.df.schema[k].dataType.simpleString()}" for k in keys
+    )
+    out_schema = (
+        (f"{key_fields}, " if keys else "")
+        + "tile_row int, tile_col int, _lp int, _vals array<double>"
+    )
 
-        axis = 1 if dim == X else 0
-        key_fields = ", ".join(
-            f"{k} {tc.df.schema[k].dataType.simpleString()}" for k in keys
-        )
-        out_schema = (
-            (f"{key_fields}, " if keys else "")
-            + "tile_row int, tile_col int, _lp int, _vals array<double>"
-        )
+    def emit(
+        batches: "Iterator[pd.DataFrame]",
+    ) -> "Iterator[pd.DataFrame]":
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            out = []
+            for row in pdf.itertuples(index=False):
+                rec = row._asdict()
+                a = np.asarray(
+                    rec["data"], dtype="float64"
+                ).reshape(T, T)
+                if axis == 0:
+                    a = a.T
+                base = {k: rec[k] for k in keys}
+                base["tile_row"] = int(rec["tile_row"])
+                base["tile_col"] = int(rec["tile_col"])
+                for lp in range(T):
+                    line = a[lp]
+                    out.append({
+                        **base, "_lp": lp,
+                        "_vals": line[~np.isnan(line)].tolist(),
+                    })
+            yield pd.DataFrame(out)
 
-        def emit(
-            batches: "Iterator[pd.DataFrame]",
-        ) -> "Iterator[pd.DataFrame]":
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                out = []
-                for row in pdf.itertuples(index=False):
-                    rec = row._asdict()
-                    a = np.asarray(
-                        rec["data"], dtype="float64"
-                    ).reshape(T, T)
-                    if axis == 0:
-                        a = a.T
-                    base = {k: rec[k] for k in keys}
-                    base["tile_row"] = int(rec["tile_row"])
-                    base["tile_col"] = int(rec["tile_col"])
-                    for lp in range(T):
-                        line = a[lp]
-                        out.append({
-                            **base, "_lp": lp,
-                            "_vals": line[~np.isnan(line)].tolist(),
-                        })
-                yield pd.DataFrame(out)
-
-        return tc.df.mapInPandas(emit, out_schema)
-    raise ValueError(f"impl must be 'auto', 'sql' or 'numpy', got {impl!r}")
+    return tc.df.mapInPandas(emit, out_schema)
 
 
 def quantiles_spatial_tiled(
@@ -1052,7 +893,6 @@ def quantiles_spatial_tiled(
     dim: str,
     probabilities: "Sequence[float] | None" = None,
     q: int | None = None,
-    impl: str = "auto",
 ) -> Cube:
     """openEO ``quantiles`` over a SPATIAL axis natively on tiles — the
     x/y twin of :func:`quantiles_tiled` (long:
@@ -1074,9 +914,7 @@ def quantiles_spatial_tiled(
         raise ValueError("quantiles_spatial_tiled needs a GridSpec")
     T = tc.tile
     keys = tc.key_dims
-    if impl == "auto":
-        impl = "numpy" if T * T >= TILE_VECTORIZE_CELLS else "sql"
-    lines = _spatial_line_values(tc, dim, impl)
+    lines = _spatial_line_values(tc, dim)
     if dim == X:
         idx = F.col("tile_row").cast("long") * T + F.col("_lp")
         kept, n_kept = Y, tc.n_y
@@ -1101,12 +939,10 @@ def quantiles_spatial_tiled(
     return Cube(out, tc.schema.drop(dim))
 
 
-def _reduce_spatial_multiset(
-    tc: TiledCube, dim: str, reducer: str, impl: str
-) -> Cube:
+def _reduce_spatial_multiset(tc: TiledCube, dim: str, reducer: str) -> Cube:
     """median/product over a spatial axis (see
     :func:`reduce_spatial_tiled`): per-line non-NULL value arrays out
-    of each tile (sql HOF filter or numpy), one line-keyed exchange of
+    of each tile, one line-keyed exchange of
     COMPACT arrays, explode after the exchange, finish with the long
     reducer expressions."""
     from ..operators.reducers import median_expr, product_expr
@@ -1114,7 +950,7 @@ def _reduce_spatial_multiset(
     g = tc.schema.grid
     T = tc.tile
     keys = tc.key_dims
-    lines = _spatial_line_values(tc, dim, impl)
+    lines = _spatial_line_values(tc, dim)
     if dim == X:
         idx = F.col("tile_row").cast("long") * T + F.col("_lp")
         kept, n_kept = Y, tc.n_y
@@ -1138,129 +974,48 @@ def _reduce_spatial_multiset(
 
 
 def _fold_time_groups(
-    tc: TiledCube, reducer: str, impl: str, extra_keys: list[str]
+    tc: TiledCube, reducer: str, extra_keys: list[str]
 ) -> DataFrame:
     """Shared engine of reduce_time_tiled / aggregate_temporal_period_
     tiled: the element-wise fold over each (band, *extra_keys, tile)
-    group's arrays, sql or numpy. Band-less cubes (a band-expression
-    reducer's output) group on the remaining keys."""
+    group's arrays. Band-less cubes (a band-expression reducer's
+    output) group on the remaining keys."""
     band = [BAND] if BAND in tc.schema.dims else []
     return _fold_groups(
-        tc, reducer, impl,
+        tc, reducer,
         keys=[*band, *extra_keys, "tile_row", "tile_col"],
         sort_field=TIME,
     )
 
 
 def _fold_groups(
-    tc: TiledCube, reducer: str, impl: str, keys: list[str],
-    sort_field: str,
+    tc: TiledCube, reducer: str, keys: list[str], sort_field: str,
 ) -> DataFrame:
-    """The element-wise fold over each key-group's arrays (sql or
-    numpy), collapsing whatever dimension is NOT in ``keys``;
-    ``sort_field`` pins the fold order (time for time reductions,
-    band label for band reductions)."""
-    if reducer not in (*_TILE_SQL_REDUCERS, "sd", "variance"):
-        raise ValueError(
-            f"reducer must be one of "
-            f"{sorted((*_TILE_SQL_REDUCERS, 'sd', 'variance'))}, "
-            f"got {reducer!r} (median has its own op: "
-            "reduce_time_median_tiled)"
-        )
-    T2 = tc.tile * tc.tile
-    if impl == "auto":
-        impl = "numpy" if T2 >= TILE_VECTORIZE_CELLS else "sql"
-    if impl == "numpy":
-        return _reduce_time_numpy(tc, reducer, keys, sort_field)
-    if impl != "sql":
-        raise ValueError(
-            f"impl must be 'auto', 'sql' or 'numpy', got {impl!r}"
-        )
-    if reducer in ("sd", "variance"):
-        # exact-sums sample sd/variance per position (the long tier's
-        # reducers.sd_expr arithmetic): three element-wise folds
-        # (Σx, Σx², count) combined by a nested zip_with; <2 samples
-        # → NULL, NULL elements skipped
-        # greatest(0, .): the sd_expr cancellation clamp
-        core = ("greatest(CAST(0.0 AS DOUBLE), sq.q - sq.s * sq.s / c)"
-                " / (c - 1)")
-        fin = f"sqrt({core})" if reducer == "sd" else core
-        fold = (
-            f"transform(array(array_sort(collect_list(struct({sort_field}, data)))), "
-            "ds -> zip_with("
-            "  zip_with("
-            f"    aggregate(ds, array_repeat(CAST(0.0 AS DOUBLE), {T2}), "
-            "      (acc, e) -> zip_with(acc, e.data, "
-            "        (a, v) -> a + coalesce(v, CAST(0.0 AS DOUBLE)))), "
-            f"    aggregate(ds, array_repeat(CAST(0.0 AS DOUBLE), {T2}), "
-            "      (acc, e) -> zip_with(acc, e.data, "
-            "        (a, v) -> a + coalesce(v * v, CAST(0.0 AS DOUBLE)))), "
-            "    (s, q) -> named_struct('s', s, 'q', q)), "
-            f"  aggregate(ds, array_repeat(CAST(0 AS BIGINT), {T2}), "
-            "    (acc, e) -> zip_with(acc, e.data, "
-            "      (a, v) -> a + CASE WHEN v IS NULL THEN 0 ELSE 1 END)), "
-            f"  (sq, c) -> CASE WHEN c > 1 THEN {fin} END))[0]"
-        )
-        return (
-            _widened(tc, keys).groupBy(*keys)
-            .agg(F.expr(fold).alias("data"))
-            .select(*keys, "data")
-        )
-    merge, finish = _TILE_SQL_REDUCERS[reducer]
-    init = (
-        f"array_repeat(CAST(NULL AS DOUBLE), {T2})"
-        if reducer in ("min", "max")
-        else f"array_repeat(CAST(0.0 AS DOUBLE), {T2})"
-    )
-    # LET idiom: the sorted collect_list binds ONCE as lambda var `ds`
-    # (interpreted HOFs get no CSE — a staged alias would re-evaluate)
-    fold = (
-        f"transform(array(array_sort(collect_list(struct({sort_field}, data)))), "
-        "ds -> zip_with("
-        f"  aggregate(ds, {init}, "
-        f"    (acc, s) -> zip_with(acc, s.data, {merge})), "
-        f"  aggregate(ds, array_repeat(CAST(0 AS BIGINT), {T2}), "
-        "    (acc, s) -> zip_with(acc, s.data, "
-        "      (a, v) -> a + CASE WHEN v IS NULL THEN 0 ELSE 1 END)), "
-        f"  (s, c) -> {finish}))[0]"
-    )
-    return (
-        _widened(tc, keys).groupBy(*keys)
-        .agg(F.expr(fold).alias("data"))
-        .select(*keys, "data")
-    )
-
-
-def _reduce_time_numpy(
-    tc: TiledCube, reducer: str, keys: list[str], sort_field: str
-) -> DataFrame:
+    """The element-wise fold over each key-group's arrays, collapsing
+    whatever dimension is NOT in ``keys``; ``sort_field`` pins the fold
+    order (time for time reductions, band label for band reductions)."""
     import numpy as np
     import pandas as pd
 
-    nanop = {
-        "mean": None,  # sums/counts below (matches the sql fold exactly)
+    nanops = {
+        "mean": None,  # sums/counts below
         "sum": np.nansum,
         "min": np.nanmin,
         "max": np.nanmax,
         "sd": None,   # exact sums below (reducers.sd_expr arithmetic)
         "variance": None,
-    }[reducer]
-    int_keys = ("tile_row", "tile_col")
-
-    def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        # pin the stack order by the collapsed axis: the sql fold's
-        # array_sort does exactly this, and nansum's pairwise summation
-        # is permutation-sensitive in the last ulp on non-dyadic data —
-        # without the sort, a partitioning change upstream could move a
-        # sum result (round-15 continuation; enables _widened's
-        # parallelism floor unconditionally)
-        pdf = pdf.sort_values(sort_field)
-        # np.asarray(dtype=float64) maps None -> nan in C — never walk
-        # the 65k elements in Python (measured: the comprehension cost
-        # more than the reduction)
-        stack = np.array(
-            [np.asarray(d, dtype="float64") for d in pdf["data"]]
+    }
+    if reducer not in nanops:
+        raise ValueError(
+            f"reducer must be one of {sorted(nanops)}, "
+            f"got {reducer!r} (median has its own op: "
+            "reduce_time_median_tiled)"
         )
+    nanop = nanops[reducer]
+    outer = [k for k in keys if k not in ("tile_row", "tile_col")]
+    order = [*keys, *([sort_field] if sort_field not in keys else [])]
+
+    def fold_stack(stack: np.ndarray) -> np.ndarray:
         all_nan = np.isnan(stack).all(axis=0)
         if reducer in ("sd", "variance"):
             c = (~np.isnan(stack)).sum(axis=0)
@@ -1273,24 +1028,39 @@ def _reduce_time_numpy(
                     / np.maximum(c - 1, 1),
                     np.nan,
                 )
-                out = np.sqrt(var) if reducer == "sd" else var
-        elif reducer == "mean":
+                return np.sqrt(var) if reducer == "sd" else var
+        if reducer == "mean":
             counts = (~np.isnan(stack)).sum(axis=0)
             sums = np.nansum(stack, axis=0)
             with np.errstate(invalid="ignore"):
-                out = np.where(counts > 0, sums / np.maximum(counts, 1), np.nan)
-        else:
-            # nan-reductions warn on all-nan slices; mask them first
-            safe = np.where(all_nan[None, :], 0.0, stack)
-            out = nanop(safe, axis=0)
-            out = np.where(all_nan, np.nan, out)
-        row0 = pdf.iloc[0]
-        rec = {
-            k: [int(row0[k]) if k in int_keys else row0[k]] for k in keys
-        }
-        obj = out.astype(object)
-        obj[np.isnan(out)] = None  # vectorized NaN->None (r13 profile)
-        rec["data"] = [obj.tolist()]
+                return np.where(counts > 0, sums / np.maximum(counts, 1),
+                                np.nan)
+        # nan-reductions warn on all-nan slices; mask them first
+        safe = np.where(all_nan[None, :], 0.0, stack)
+        return np.where(all_nan, np.nan, nanop(safe, axis=0))
+
+    def fold(pdf: pd.DataFrame) -> pd.DataFrame:
+        # pin the stack order by the collapsed axis: nansum's pairwise
+        # summation is permutation-sensitive in the last ulp on
+        # non-dyadic data — without the sort, a partitioning change
+        # upstream could move a sum result (round-15 continuation;
+        # enables the pandas-stage parallelism floor unconditionally).
+        # Sorting by the keys first lays each of the group's tiles
+        # (one, or k x k small ones — _tile_groups) out contiguously.
+        pdf = pdf.sort_values(order, kind="stable")
+        # np.asarray(dtype=float64) maps None -> nan in C — never walk
+        # the 65k elements in Python (measured: the comprehension cost
+        # more than the reduction)
+        stack = np.array(
+            [np.asarray(d, dtype="float64") for d in pdf["data"]]
+        )
+        codes = pdf.groupby(keys, sort=False).ngroup().to_numpy()
+        starts = np.flatnonzero(np.r_[True, codes[1:] != codes[:-1]])
+        segs = list(zip(starts, np.r_[starts[1:], len(codes)]))
+        out = np.array([fold_stack(stack[a:b]) for a, b in segs])
+        first = pdf.iloc[[a for a, _ in segs]]
+        rec = {k: first[k].to_numpy() for k in keys}
+        rec["data"] = list(out)  # NaN elements reach Arrow as NULL
         return pd.DataFrame(rec)
 
     # key types come from the input schema itself (a derived label like
@@ -1299,7 +1069,8 @@ def _reduce_time_numpy(
     fields = ", ".join(
         f"{k} {tc.df.schema[k].dataType.simpleString()}" for k in keys
     )
-    return _widen_py(tc, tc.df, keys).groupBy(*keys).applyInPandas(
+    grouped, bkeys = _tile_groups(tc.df, tc.tile, outer)
+    return _widen_py(tc, grouped, bkeys).groupBy(*bkeys).applyInPandas(
         fold, f"{fields}, data array<double>"
     )
 
@@ -1798,9 +1569,9 @@ def reduce_time_median_tiled(tc: TiledCube) -> TiledCube:
     ``percentile`` and DuckDB ``quantile_cont`` at q=0.5 (exact on the
     dyadic fixture: sorting plus one mean of two dyadics).
 
-    numpy-only engine (no sql fold mode): a per-position sort in
-    interpreted HOF lambdas is O(tile² · n_t log n_t) interpreted
-    evaluations per tile — the vectorized ``np.nanmedian`` over the
+    A per-position sort in interpreted HOF lambdas would be
+    O(tile² · n_t log n_t) interpreted evaluations per tile — the
+    vectorized ``np.nanmedian`` over the
     stacked (n_t, tile²) block is the only sensible physical plan, and
     its exactness on the gate fixture is an arithmetic argument, not a
     hope (pinned against the long reducer by oracle + pytest)."""
@@ -2459,7 +2230,7 @@ def merge_cubes_tiled(
 
 
 def resample_spatial_tiled(
-    tc: TiledCube, factor: int, reducer: str = "mean", impl: str = "auto"
+    tc: TiledCube, factor: int, reducer: str = "mean"
 ) -> TiledCube:
     """Integer-factor spatial downsampling natively on tiles — the
     block-aggregate semantics of the long
@@ -2477,14 +2248,12 @@ def resample_spatial_tiled(
     this is the layout paying for itself (the same reason the reference
     resamples inside dask chunks, ``load_odc_collection.py:130``).
 
-    Engines (the :func:`reduce_time_tiled` dispatch pattern): ``"sql"``
-    — a nested HOF fold, oracle mode at small tiles; ``"numpy"`` — an
-    Arrow-batched reshape + nan-reduction per tile, the scale path;
-    ``"auto"`` picks by ``TILE_VECTORIZE_CELLS``. Reducers: mean / sum /
-    min / max / nearest (upper-left sample — openEO ``near``)."""
-    from dataclasses import replace as _dc_replace
-
-    from .cube import GridSpec
+    Engine: an Arrow-batched ``mapInPandas`` reshape + nan-reduction
+    per tile. Reducers: mean / sum / min / max / nearest (upper-left
+    sample — openEO ``near``)."""
+    import numpy as np
+    import pandas as pd
+    from typing import Iterator
 
     k = int(factor)
     T = tc.tile
@@ -2501,82 +2270,42 @@ def resample_spatial_tiled(
     if g is None:
         raise ValueError("resample_spatial_tiled needs a GridSpec")
     OT = T // k
-    OT2, K2 = OT * OT, k * k
-    if impl == "auto":
-        impl = "numpy" if T * T >= TILE_VECTORIZE_CELLS else "sql"
-    if impl == "sql":
-        gather = (
-            f"data[((p DIV {OT}) * {k} + q DIV {k}) * {T} "
-            f"+ (p % {OT}) * {k} + q % {k}]"
-        )
-        if reducer == "nearest":
-            pool = f"data[(p DIV {OT}) * {k} * {T} + (p % {OT}) * {k}]"
-        elif reducer in ("mean", "sum"):
-            finish = (
-                "CASE WHEN acc.c = 0 THEN CAST(NULL AS DOUBLE) "
-                + ("ELSE acc.s / acc.c END" if reducer == "mean"
-                   else "ELSE acc.s END")
-            )
-            pool = (
-                f"aggregate(sequence(0, {K2 - 1}), "
-                "named_struct('s', CAST(0.0 AS DOUBLE), 'c', CAST(0 AS BIGINT)), "
-                f"(acc, q) -> CASE WHEN {gather} IS NULL THEN acc "
-                f"ELSE named_struct('s', acc.s + {gather}, 'c', acc.c + 1) END, "
-                f"acc -> {finish})"
-            )
-        else:
-            cmp = "<" if reducer == "min" else ">"
-            pool = (
-                f"aggregate(sequence(0, {K2 - 1}), CAST(NULL AS DOUBLE), "
-                f"(acc, q) -> CASE WHEN {gather} IS NULL THEN acc "
-                f"WHEN acc IS NULL THEN {gather} "
-                f"WHEN {gather} {cmp} acc THEN {gather} ELSE acc END)"
-            )
-        out = F.expr(f"transform(sequence(0, {OT2 - 1}), p -> {pool})")
-        df = tc.df.withColumn("data", out)
-    elif impl == "numpy":
-        import numpy as np
-        import pandas as pd
-        from typing import Iterator
+    red = reducer
 
-        red = reducer
-
-        def pool_batch(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-            for pdf in batches:
-                pooled = []
-                for d in pdf["data"]:
-                    a = np.asarray(d, dtype="float64").reshape(T, T)
-                    if red == "nearest":
-                        out = a[::k, ::k]
+    def pool_batch(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
+        for pdf in batches:
+            pooled = []
+            for d in pdf["data"]:
+                a = np.asarray(d, dtype="float64").reshape(T, T)
+                if red == "nearest":
+                    out = a[::k, ::k]
+                else:
+                    b = a.reshape(OT, k, OT, k)
+                    nan = np.isnan(b)
+                    all_nan = nan.all(axis=(1, 3))
+                    if red == "mean":
+                        c = (~nan).sum(axis=(1, 3))
+                        s = np.nansum(b, axis=(1, 3))
+                        with np.errstate(invalid="ignore"):
+                            out = np.where(c > 0, s / np.maximum(c, 1), np.nan)
+                    elif red == "sum":
+                        out = np.where(all_nan, np.nan, np.nansum(b, axis=(1, 3)))
                     else:
-                        b = a.reshape(OT, k, OT, k)
-                        nan = np.isnan(b)
-                        all_nan = nan.all(axis=(1, 3))
-                        if red == "mean":
-                            c = (~nan).sum(axis=(1, 3))
-                            s = np.nansum(b, axis=(1, 3))
-                            with np.errstate(invalid="ignore"):
-                                out = np.where(c > 0, s / np.maximum(c, 1), np.nan)
-                        elif red == "sum":
-                            out = np.where(all_nan, np.nan, np.nansum(b, axis=(1, 3)))
-                        else:
-                            # nan-reductions warn on all-nan blocks;
-                            # zero-fill those and restore NULL after
-                            op = np.nanmin if red == "min" else np.nanmax
-                            safe = np.where(
-                                all_nan[:, None, :, None], 0.0, b
-                            )
-                            out = op(safe, axis=(1, 3))
-                            out = np.where(all_nan, np.nan, out)
-                    flat = out.reshape(-1)
-                    obj = flat.astype(object)
-                    obj[np.isnan(flat)] = None
-                    pooled.append(obj.tolist())
-                yield pdf.assign(data=pooled)
+                        # nan-reductions warn on all-nan blocks;
+                        # zero-fill those and restore NULL after
+                        op = np.nanmin if red == "min" else np.nanmax
+                        safe = np.where(
+                            all_nan[:, None, :, None], 0.0, b
+                        )
+                        out = op(safe, axis=(1, 3))
+                        out = np.where(all_nan, np.nan, out)
+                flat = out.reshape(-1)
+                obj = flat.astype(object)
+                obj[np.isnan(flat)] = None
+                pooled.append(obj.tolist())
+            yield pdf.assign(data=pooled)
 
-        df = tc.df.mapInPandas(pool_batch, tc.df.schema)
-    else:
-        raise ValueError(f"impl must be 'auto', 'sql' or 'numpy', got {impl!r}")
+    df = tc.df.mapInPandas(pool_batch, tc.df.schema)
     schema = _dc_replace(
         tc.schema,
         grid=GridSpec(x0=g.x0, y0=g.y0, resx=g.resx * k, resy=g.resy * k),
@@ -4046,14 +3775,12 @@ def _ccw(poly):
     return pts[::-1] if area2 < 0 else pts
 
 
-def _zones_literal_sql(polygons, ccw: bool = True) -> str:
+def _zones_literal_sql(polygons) -> str:
     """The polygon list as ONE constant-foldable SQL expression:
     ``from_json('<zones json>', 'array<struct<id, bbox, edges>>')``.
-    Rings are CW→CCW-normalized via :func:`_ccw` when ``ccw`` (the
-    convex half-plane engine's requirement) and kept in ORIGINAL vertex
-    order otherwise (the crossing test must round like the long
-    ray-cast UDF); ``edges`` carries (x1, y1, x2, y2, dx, dy) per
-    directed edge. Doubles go through json.dumps' shortest-round-trip
+    Rings are CW→CCW-normalized via :func:`_ccw` (the half-plane
+    interior test's requirement); ``edges`` carries (x1, y1, x2, y2,
+    dx, dy) per directed edge. Doubles go through json.dumps' shortest-round-trip
     repr and Jackson's exact parse — bit-identical to the Python float
     (oracle-pinned).
 
@@ -4068,7 +3795,7 @@ def _zones_literal_sql(polygons, ccw: bool = True) -> str:
 
     zs = []
     for i, poly in enumerate(polygons):
-        pts = _ccw(poly) if ccw else [(float(x), float(y)) for x, y in poly]
+        pts = _ccw(poly)
         xs = [p[0] for p in pts]
         ys = [p[1] for p in pts]
         n = len(pts)
@@ -4104,18 +3831,6 @@ def _inside_sql(z: str, xc: str, yc: str) -> str:
     )
 
 
-# even-odd ray cast of (xc, yc) against zone lambda-var z — the SAME
-# per-edge float arithmetic as operators/filters._ray_cast_contains
-# (xint = x1 + (y - y1) / (y2 - y1) * (x2 - x1)), as a boolean XOR fold
-def _crossing_sql(z: str, xc: str, yc: str) -> str:
-    return (
-        f"aggregate({z}.edges, false, (acc, e) -> "
-        f"CASE WHEN (({yc} < e.y1) != ({yc} < e.y2)) AND "
-        f"{xc} < e.x1 + ({yc} - e.y1) / (e.y2 - e.y1) * (e.x2 - e.x1) "
-        "THEN NOT acc ELSE acc END)"
-    )
-
-
 _ZONAL_REDUCERS = ("mean", "sum", "min", "max", "count", "sd", "variance",
                    "median", "product")
 
@@ -4125,7 +3840,6 @@ def aggregate_spatial_tiled(
     polygons: list,
     reducer: str,
     target_dimension: str = "geom_id",
-    impl: str = "auto",
 ) -> Cube:
     """Zonal statistics natively on tiles — the long
     ``aggregate_spatial`` (reference ``openeo_odc_driver.py:628-684``)
@@ -4154,6 +3868,16 @@ def aggregate_spatial_tiled(
     - **boundary**: only these tiles run per-pixel geometry, and only
       against the tile's TOUCHING zones.
 
+    Engine (:func:`_zonal_numpy`): ONE Arrow-batched ``mapInPandas``
+    pass over the touched tiles does the interior folds AND the
+    boundary per-pixel tagging vectorized (half-plane tests as array
+    ops against the same CCW edges; first-match by ascending id over
+    untagged pixels), emitting per-(tile, zone) partials — no explode,
+    no per-pixel interpreted lambdas. It serves both regimes: zones ≫
+    tile (interior folds dominate) and zones ≪ tile (every tile is
+    boundary — measured 33× over a SQL posexplode tagging path at 2025
+    sub-tile zones on 12.6 M px, PLANS.md round-10).
+
     At 10^12 px a country-sized polygon has O(area) interior tiles and
     O(perimeter) boundary tiles — the per-pixel geometry work drops by
     a factor of ~tile·(area/perimeter). One final exchange combines the
@@ -4170,27 +3894,13 @@ def aggregate_spatial_tiled(
     ``reducers.product_expr`` pins), so tagged pixel VALUES flow into
     one exchange instead.
 
-    Two engines behind identical semantics (the ``reduce_time_tiled``
-    dispatch pattern; ``"auto"`` picks by ``TILE_VECTORIZE_CELLS``):
-
-    - ``"sql"`` — interpreted HOF folds and a posexplode boundary
-      tagging path; engine-exact, the pinned oracle mode.
-    - ``"numpy"`` — ONE Arrow-batched ``mapInPandas`` pass over the
-      touched tiles does the interior folds AND the boundary per-pixel
-      tagging vectorized (half-plane tests as array ops against the
-      same CCW edges; first-match by ascending id over untagged
-      pixels), emitting per-(tile, zone) partials — no explode, no
-      per-pixel interpreted lambdas. This is the scale path for BOTH
-      regimes: zones ≫ tile (interior folds dominate) and zones ≪
-      tile (every tile is boundary — measured 33× over the sql
-      explode at 2025 sub-tile zones on 12.6 M px, PLANS.md round-10).
-
     Concave polygons are native (round 10): the long operator switches
     ALL polygons to the even-odd ray-cast rule when any is concave, so
     the tiled tier mirrors it exactly — no interior claims (the
     4-corner proof is a convex property), every touched tile runs the
-    per-pixel crossing test (:func:`_crossing_sql` / the UDF's own
-    numpy arithmetic), and outside tiles still prune at the scan."""
+    per-pixel crossing test (the long UDF's own numpy arithmetic,
+    ``operators/filters._ray_cast_contains``), and outside tiles still
+    prune at the scan."""
     from ..functions.geometry import is_convex
 
     if reducer not in _ZONAL_REDUCERS:
@@ -4213,7 +3923,6 @@ def aggregate_spatial_tiled(
     if g is None:
         raise ValueError("aggregate_spatial_tiled needs a GridSpec")
     T = tc.tile
-    T2 = T * T
     keys = tc.key_dims
 
     # scene-clipped tile-corner coordinates, projected ONCE as real
@@ -4249,15 +3958,15 @@ def aggregate_spatial_tiled(
         (F.lit(g.y0) - F.lit(g.resy) * py_hi).alias("_ylo"),  # south edge
         (F.lit(g.y0) - F.lit(g.resy) * py_lo).alias("_yhi"),  # north edge
     )
-    zlit = _zones_literal_sql(polygons, ccw=all_cvx)
+    zlit = _zones_literal_sql(polygons)
     bbox_touch = (
         "z.xmin <= _xhi AND z.xmax >= _xlo "
         "AND z.ymin <= _yhi AND z.ymax >= _ylo"
     )
     # short-circuiting scan drops outside tiles
     any_touch = f"exists({zlit}, z -> {bbox_touch})"
-    # LET idiom (see to_tiled): bind the filtered touching-zone list
-    # once; a bare alias would be re-inlined by CollapseProject into
+    # LET idiom: bind the filtered touching-zone list once as a lambda
+    # variable; a bare alias would be re-inlined by CollapseProject into
     # every reference, re-running the O(|zones|) scan per use
     inside4 = " AND ".join(
         _inside_sql("tz[0]", xc, yc)
@@ -4271,90 +3980,14 @@ def aggregate_spatial_tiled(
     # concave zone in the list the long operator switches every
     # polygon to the ray-cast rule, so the tiled tier mirrors it:
     # no interior claims (all touched tiles run per-pixel crossing
-    # tests — outside tiles still prune at the scan) and the
-    # crossing arithmetic matches the UDF bit-for-bit
+    # tests — outside tiles still prune at the scan)
     staged = corner.where(F.expr(any_touch)).withColumn(
         "_ig",
         F.expr(ig_expr) if all_cvx else F.lit(None).cast("int"),
     )
 
-    if impl == "auto":
-        impl = "numpy" if T2 >= TILE_VECTORIZE_CELLS else "sql"
-    if impl == "numpy":
-        return _zonal_numpy(
-            tc, staged, polygons, reducer, target_dimension, all_cvx
-        )
-    if impl != "sql":
-        raise ValueError(
-            f"impl must be 'auto', 'sql' or 'numpy', got {impl!r}"
-        )
-
-    # ---- sql engine (interpreted HOFs; the pinned oracle mode) ----
-    if reducer in ("median", "product"):
-        # multiset reducers: median needs the pixel value multiset for
-        # the exact percentile; product folds over the SORTED values
-        # (reducers.product_expr — sorting pins the rounding order, so
-        # the tiled fold is bit-identical to the long one)
-        from ..operators.reducers import median_expr, product_expr
-
-        agg = median_expr(VALUE) if reducer == "median" else product_expr(VALUE)
-        px = _zonal_pixels(
-            staged, zlit, bbox_touch, keys, T, tc, target_dimension,
-            interior_too=True, all_cvx=all_cvx,
-        )
-        out = (
-            px.groupBy(target_dimension, *keys)
-            .agg(agg.alias(VALUE))
-            .where(F.col(target_dimension).isNotNull())
-        )
-        return Cube(out, tc.schema.drop(X).drop(Y))
-
-    # interior tiles -> (s, ss, c, mn, mx) partials, one row per tile
-    fold = F.expr(
-        "aggregate(data, named_struct("
-        "'s', CAST(0.0 AS DOUBLE), 'ss', CAST(0.0 AS DOUBLE), "
-        "'c', CAST(0 AS BIGINT), "
-        "'mn', CAST(NULL AS DOUBLE), 'mx', CAST(NULL AS DOUBLE)), "
-        "(acc, v) -> CASE WHEN v IS NULL THEN acc ELSE named_struct("
-        "'s', acc.s + v, 'ss', acc.ss + v * v, 'c', acc.c + 1, "
-        "'mn', CASE WHEN acc.mn IS NULL OR v < acc.mn THEN v ELSE acc.mn END, "
-        "'mx', CASE WHEN acc.mx IS NULL OR v > acc.mx THEN v ELSE acc.mx END) "
-        "END)"
-    )
-    interior = (
-        staged.where(F.col("_ig").isNotNull())
-        .select(*keys, F.col("_ig").alias(target_dimension),
-                fold.alias("_p"))
-        .select(
-            target_dimension, *keys,
-            F.col("_p.s").alias("_s"), F.col("_p.ss").alias("_ss"),
-            F.col("_p.c").alias("_c"),
-            F.col("_p.mn").alias("_mn"), F.col("_p.mx").alias("_mx"),
-        )
-    )
-
-    # boundary tiles: pixels out, exact first-match tagging, then the
-    # same partial shape
-    b = _zonal_pixels(
-        staged.where(F.col("_ig").isNull()),
-        zlit, bbox_touch, keys, T, tc, target_dimension,
-        interior_too=False, all_cvx=all_cvx,
-    )
-    boundary = (
-        b.groupBy(target_dimension, *keys)
-        .agg(
-            F.coalesce(F.sum(VALUE), F.lit(0.0)).alias("_s"),
-            F.coalesce(
-                F.sum(F.col(VALUE) * F.col(VALUE)), F.lit(0.0)
-            ).alias("_ss"),
-            F.count(VALUE).alias("_c"),
-            F.min(VALUE).alias("_mn"),
-            F.max(VALUE).alias("_mx"),
-        )
-        .where(F.col(target_dimension).isNotNull())
-    )
-    return _zonal_finish(
-        interior.unionByName(boundary), reducer, target_dimension, keys, tc
+    return _zonal_numpy(
+        tc, staged, polygons, reducer, target_dimension, all_cvx
     )
 
 
@@ -4372,67 +4005,6 @@ def _zonal_finish(
     return Cube(out, tc.schema.drop(X).drop(Y))
 
 
-def _zonal_pixels(
-    staged,
-    zlit: str,
-    bbox_touch: str,
-    keys,
-    T: int,
-    tc: TiledCube,
-    target_dimension: str,
-    interior_too: bool,
-    all_cvx: bool = True,
-):
-    """SQL-engine pixel tagging: posexplode the given classified tile
-    rows to tagged pixel rows.
-
-    ``_tz`` (the tile's touching-zone list) is materialized per TILE
-    row before the Generate — per-pixel tagging then scans only the
-    touching zones (usually O(1)), never the full zone list. Interior
-    pixels (``interior_too=True``, the median path) tag with the
-    constant ``_ig`` via a short-circuiting coalesce — zero per-pixel
-    geometry off the boundary. Out-of-scene padding of edge tiles is
-    dropped by index bounds BEFORE tagging, so a zone overlapping only
-    padding can never fabricate a group the long operator lacks."""
-    g = tc.schema.grid
-    tz = (
-        F.expr(f"filter({zlit}, z -> {bbox_touch})")
-        if interior_too
-        else F.expr(
-            f"CASE WHEN _ig IS NULL THEN filter({zlit}, z -> {bbox_touch}) "
-            "END"
-        )
-    )
-    src = staged.select(
-        *keys, "tile_row", "tile_col", "_ig", tz.alias("_tz"), "data"
-    )
-    b = src.select(
-        *keys, "tile_row", "tile_col", "_ig", "_tz",
-        F.posexplode("data").alias("_pos", VALUE),
-    )
-    y_idx = F.col("tile_row").cast("long") * T + (F.col("_pos") / T).cast("long")
-    x_idx = F.col("tile_col").cast("long") * T + F.col("_pos") % T
-    b = b.where((y_idx < tc.n_y) & (x_idx < tc.n_x)).select(
-        *keys, "_ig", "_tz",
-        (F.lit(g.y0) - F.lit(g.resy) * y_idx).alias(Y),
-        (F.lit(g.x0) + F.lit(g.resx) * x_idx).alias(X),
-        VALUE,
-    )
-    contains = _inside_sql if all_cvx else _crossing_sql
-    pix_tag = F.expr(
-        f"filter(_tz, z -> {contains('z', X, Y)})[0].id"
-    )
-    tag = F.coalesce(F.col("_ig"), pix_tag) if interior_too else pix_tag
-    # NO isNotNull filter here: Catalyst pushes such a filter below the
-    # projection by substituting the alias, so the interpreted per-pixel
-    # HOF tag would evaluate TWICE per pixel (once in the Filter, once
-    # in the Project — measured 2x boundary cost). Untagged pixels ride
-    # into the aggregation as one NULL-keyed group per partition (map-
-    # side combine collapses them) and the CALLER drops that group
-    # after its groupBy.
-    return b.withColumn(target_dimension, tag).drop("_ig", "_tz")
-
-
 def _zonal_numpy(
     tc: TiledCube,
     staged,
@@ -4443,10 +4015,11 @@ def _zonal_numpy(
 ) -> Cube:
     """Vectorized zonal engine: ONE ``mapInPandas`` pass over the
     touched tiles computes interior folds AND boundary per-pixel
-    first-match tagging as numpy array ops (identical doubles to the
-    SQL engine: same CCW edges, same ``x0 + resx·ix`` coordinate
-    arithmetic, same half-plane sign test — pinned ≡ sql by pytest on
-    every reducer). Per tile the cost is
+    first-match tagging as numpy array ops (the same CCW edges, ``x0 +
+    resx·ix`` coordinate arithmetic and half-plane sign test as the
+    tile classification and the long operator — pinned frame-exact
+    against the long aggregate_spatial by pytest on every reducer).
+    Per tile the cost is
     O(touching zones · tile²) vectorized flops; no posexplode, no
     interpreted lambdas, no per-pixel rows except for median, where
     the tagged pixel VALUES (not coordinates) stream into one exact

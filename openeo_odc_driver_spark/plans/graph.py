@@ -1098,26 +1098,20 @@ class ProcessGraph:
         return NotImplemented
 
 
-def _reduce_bands_expression_tiled(tc, child: dict, impl: str = "auto"):
+def _reduce_bands_expression_tiled(tc, child: dict):
     """The tiled twin of :func:`_reduce_bands_expression`: the band rows
     of each (time, tile) join into one wide row (one array column per
-    band — join key count is tiles, not pixels), then the compiled
-    expression evaluates per pixel.
+    band — join key count is tiles, not pixels), then ONE transform over
+    the pixel index evaluates the expression with each band's element
+    bound via O(1) array indexing. It reuses :func:`_compile_expr`
+    verbatim, so graph arithmetic cannot drift between tiers.
 
-    Two evaluation engines (the ``assign_impl`` dispatch pattern):
-
-    - ``"sql"`` — ONE transform over the pixel index with each band's
-      element bound via O(1) array indexing; reuses
-      :func:`_compile_expr` verbatim, so graph arithmetic cannot drift
-      between tiers. Interpreted per element (~µs each — the round-12
-      100× probe measured the NDVI zip at ~½ the graph wall on 630 M
-      cells), so it is the small-tile / oracle-mode engine.
-    - ``"numpy"`` — :func:`_compile_expr_numpy` over the Arrow batch's
-      band arrays inside ``mapInPandas`` (no extra exchange; the wide
-      join's output feeds the map). Used at/above the vectorize
-      threshold when the sub-graph is inside the twin's exactness
-      subset; otherwise the sql engine runs at any size
-      (:class:`_TwinUnsupported` fallback — never wrong, just slower).
+    The round-12 interleaved A/B (126 M and 1.26 G cells, PLANS.md)
+    found this interpreted transform and an Arrow/numpy evaluator
+    indistinguishable for band arithmetic (~3 flops/cell: the per-
+    element interpretation and the Arrow serde of whole band arrays
+    cost about the same), so the JVM-resident engine is the only one —
+    no Python workers or Arrow buffers in the path.
     """
     from ..core.tiled import TiledCube
 
@@ -1147,74 +1141,6 @@ def _reduce_bands_expression_tiled(tc, child: dict, impl: str = "auto"):
         wide = side if wide is None else wide.join(side, jk)
     T2 = tc.tile * tc.tile
     out_schema = tc.schema.drop(BAND).with_bands(())
-    if impl == "auto":
-        # MEASURED (round-12 interleaved A/B at 126 M and 1.26 G cells,
-        # PLANS.md): the two engines are statistically indistinguishable
-        # for band arithmetic — ~3 flops/cell means the interpreted
-        # per-element transform and the Arrow serde of whole band
-        # arrays cost about the same, and the box's run-to-run drift
-        # (±3× on identical plans) dwarfs any between-engine delta.
-        # Default to the JVM-resident sql engine at every size: no
-        # Python workers in the path, no Arrow buffer memory, identical
-        # results (both engines bit-exact, pytest-pinned). numpy stays
-        # reachable for expression shapes where compute-per-byte grows.
-        impl = "sql"
-
-    if impl == "numpy":
-        try:
-            # compile-time probe: binds zero-length arrays so an
-            # unsupported op falls back BEFORE any job runs
-            import numpy as _np
-
-            probe = _np.zeros(0)
-            _compile_expr_numpy(
-                child, {"data": lambda a, _p=probe: _p}
-            )
-        except _TwinUnsupported:
-            impl = "sql"
-
-    if impl == "numpy":
-        import numpy as np
-        import pandas as pd
-
-        band_list = list(bands)
-        cols = [*keys, "tile_row", "tile_col"]
-
-        def evaluate(batches):
-            for pdf in batches:
-                mats = {
-                    b: np.array(
-                        [np.asarray(d, dtype="float64")
-                         for d in pdf[f"_b_{b}"]]
-                    )
-                    for b in band_list
-                }
-
-                def band_arr(cargs: dict):
-                    label = cargs.get("label")
-                    if label is None:
-                        label = band_list[int(cargs["index"])]
-                    return mats[label]
-
-                res = np.asarray(
-                    _compile_expr_numpy(child, {"data": band_arr}),
-                    dtype="float64",
-                )
-                if res.ndim < 2:  # constant-only sub-graph
-                    res = np.broadcast_to(res, (len(pdf), T2)).copy()
-                out = pdf[cols].copy()
-                obj = res.astype(object)
-                obj[np.isnan(res)] = None
-                out["data"] = [r.tolist() for r in obj]
-                yield out
-
-        fields = ", ".join(
-            f"{c} {tc.df.schema[c].dataType.simpleString()}"
-            if c in keys else f"{c} int"
-            for c in cols
-        )
-        df = wide.mapInPandas(evaluate, f"{fields}, data array<double>")
-        return TiledCube(df, out_schema, tc.tile, tc.n_y, tc.n_x)
 
     def elem(i):
         def band_col(cargs: dict):
@@ -1231,157 +1157,6 @@ def _reduce_bands_expression_tiled(tc, child: dict, impl: str = "auto"):
     )
     out = wide.select(*keys, "tile_row", "tile_col", data.alias("data"))
     return TiledCube(out, out_schema, tc.tile, tc.n_y, tc.n_x)
-
-
-class _TwinUnsupported(NotImplementedError):
-    """The arithmetic sub-graph uses an op outside the numpy twin's
-    NaN≡NULL-safe subset — callers fall back to the interpreted
-    zip_with/transform path (never wrong, just slower)."""
-
-
-def _compile_expr_numpy(child: dict, params: Dict[str, Any]):
-    """Numpy twin of :func:`_compile_expr` (round 12): compiles the same
-    openEO scalar sub-graph to a vectorized numpy callable for the tiled
-    tier's Arrow batches, where NULL elements ride as NaN.
-
-    Scope is the subset whose Spark edge semantics map EXACTLY onto
-    NaN arithmetic (each primitive pinned by the randomized parity test
-    in tests/test_round12.py against the Column builder it twins,
-    including the empirically-verified non-ANSI corners: x/0 → NULL for
-    every x, ln/log of ≤0 → NULL, clip(NULL) → lo via least/greatest
-    null-skipping, mod's composed x − y·floor(x/y)). Ops that produce
-    NaN VALUES from valid inputs (sqrt(−1), pow(−1, ½), trig of ±inf)
-    are excluded — the tiled array boundary folds NaN into NULL, so the
-    twin could not preserve the distinction — and raise
-    :class:`_TwinUnsupported`, as do comparisons/boolean logic (NULL
-    three-valued logic has no NaN analogue) and ALL transcendentals
-    (ln/log/exp/trig/arctan/sqrt/power): libm and the JVM round the
-    last ulp differently (measured: ln(1.25) differs), and this engine
-    does not trade bit-exactness for speed. The twin is the
-    algebraically-exact IEEE subset only. Composition mirrors
-    _compile_expr node for node, so supported graphs cannot drift."""
-    import numpy as np
-
-    def nan_where(r, cond):
-        r = np.asarray(r, dtype="float64")
-        return np.where(cond, np.nan, r)
-
-    def b_add(x, y):
-        return x + y
-
-    def b_subtract(x, y):
-        return x - y
-
-    def b_multiply(x, y):
-        return x * y
-
-    def b_divide(x, y):
-        with np.errstate(all="ignore"):
-            return nan_where(x / y, np.asarray(y) == 0.0)
-
-    def b_normalized_difference(x, y):
-        s = x + y
-        with np.errstate(all="ignore"):
-            return nan_where((x - y) / s, np.asarray(s) == 0.0)
-
-    def b_mod(x, y):
-        return x - y * u_floor(b_divide(x, y))
-
-    def u_floor(x):
-        return np.floor(x) + 0.0  # long-cast canonicalizes -0.0
-
-    def u_ceil(x):
-        return np.ceil(x) + 0.0
-
-    def u_int(x):
-        return np.trunc(x) + 0.0
-
-    def u_absolute(x):
-        return np.abs(x)
-
-    def c_clip(x, lo, hi):
-        x = np.asarray(x, dtype="float64")
-        r = np.clip(x, lo, hi)
-        # Spark least/greatest SKIP nulls: clip(NULL, lo, hi) = lo
-        return np.where(np.isnan(x), lo, r)
-
-    def c_lsr(x, imin, imax, omin, omax):
-        clipped = c_clip(x, float(imin), float(imax))
-        return ((clipped - float(imin)) * float(omax - omin)
-                / float(imax - imin) + float(omin))
-
-    binary = {
-        "add": b_add, "subtract": b_subtract, "multiply": b_multiply,
-        "divide": b_divide,
-        "normalized_difference": b_normalized_difference,
-        "mod": b_mod,
-    }
-    unary = {
-        "floor": u_floor, "ceil": u_ceil, "int": u_int,
-        "absolute": u_absolute,
-    }
-
-    memo: Dict[str, Any] = {}
-    result_id = next(
-        (nid for nid, n in child.items() if n.get("result")), None
-    ) or next(reversed(child))
-
-    def resolve(v: Any, node_args: dict) -> Any:
-        if isinstance(v, dict) and "from_node" in v:
-            return build(v["from_node"])
-        if isinstance(v, dict) and "from_parameter" in v:
-            p = params[v["from_parameter"]]
-            if callable(p):
-                return p(node_args)
-            return p
-        if isinstance(v, bool) or v is None:
-            raise _TwinUnsupported(f"operand {v!r}")
-        try:
-            return float(v)
-        except (TypeError, ValueError):
-            # non-numeric literal (string label, list): not this twin's
-            # dialect — fall back to the interpreted path, don't escape
-            # the compile-time probe as a bare ValueError
-            raise _TwinUnsupported(f"operand {v!r}")
-
-    def build(nid: str):
-        if nid in memo:
-            return memo[nid]
-        node = child[nid]
-        pid = node["process_id"]
-        args = node.get("arguments", {})
-        if pid == "array_element":
-            out = params["data"](args)
-        elif pid in binary:
-            # NB: power/log never reach here — transcendentals are not
-            # in `binary` by design (they raise _TwinUnsupported below)
-            out = binary[pid](
-                resolve(args.get("x"), args), resolve(args.get("y"), args)
-            )
-        elif pid in unary:
-            out = unary[pid](resolve(args.get("x", args.get("data")), args))
-        elif pid == "pi":
-            import math as _m
-
-            out = _m.pi
-        elif pid == "clip":
-            out = c_clip(resolve(args.get("x"), args),
-                         float(args.get("min", 0.0)),
-                         float(args.get("max", 1.0)))
-        elif pid == "linear_scale_range":
-            out = c_lsr(resolve(args.get("x"), args),
-                        args["inputMin"], args["inputMax"],
-                        args.get("outputMin", 0.0),
-                        args.get("outputMax", 1.0))
-        else:
-            # strict subset of _compile_expr's dispatch — anything it
-            # can't do (or does with non-NaN-mappable semantics) falls
-            # back to the interpreted path
-            raise _TwinUnsupported(f"expression op {pid!r}")
-        memo[nid] = out
-        return out
-
-    return build(result_id)
 
 
 def _compile_model(graph: dict):

@@ -24,6 +24,7 @@ import csv
 import hashlib
 import json
 import os
+import re
 import shutil
 import threading
 from typing import Optional
@@ -164,6 +165,9 @@ def collection_stac(cid: str, store_dir: Optional[str] = None) -> dict:
     }
 
 
+_JOB_ID = re.compile(r"[A-Za-z0-9_-]{1,64}")
+
+
 def create_app(spark: SparkSession, work_dir: str = "/tmp/spark_graft_service",
                sf_dir: Optional[str] = None,
                tiled_store_dir: str = "/tmp/spark_graft_tiled_store"):
@@ -172,16 +176,32 @@ def create_app(spark: SparkSession, work_dir: str = "/tmp/spark_graft_service",
     app = Flask("openeo_odc_driver_spark")
     store = JobStore(work_dir)
 
+    def bad_request(job_id, message: str):
+        return jsonify({"id": job_id, "code": "InvalidRequest",
+                        "message": message}), 400
+
     @app.post("/graph")
     def run_graph():
         payload = request.get_json(force=True)
         job_id = payload.get("id") or hashlib.md5(
             os.urandom(16)
         ).hexdigest()[:12]
+        # the id names the job directory: reject anything that could
+        # leave work_dir ("../x", "/tmp/x") before touching the disk
+        if not isinstance(job_id, str) or not _JOB_ID.fullmatch(job_id):
+            return bad_request(
+                job_id, f"id must match {_JOB_ID.pattern}, got {job_id!r}"
+            )
         # execution-mode knobs ride the payload next to the graph
         # (this service's own shape — the reference has no tiled tier)
         tiled = bool(payload.get("tiled"))
-        tile = int(payload.get("tile", 8))
+        tile = payload.get("tile", 8)
+        # a JSON integer only: no float truncation (2.9 -> 2), no
+        # booleans (true -> 1), no Infinity/NaN literals
+        if not isinstance(tile, int) or isinstance(tile, bool) or tile < 1:
+            return bad_request(
+                job_id, f"tile must be an integer >= 1, got {tile!r}"
+            )
         md5 = _graph_md5(payload, tiled=tiled, tile=tile)
         job_dir = os.path.join(store.root, "jobs", job_id)
         os.makedirs(job_dir, exist_ok=True)

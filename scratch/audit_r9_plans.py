@@ -10,11 +10,11 @@ cube = synthetic_cube(spark)
 tc = t.to_tiled(cube, tile=4)
 
 print("=== resample_spatial_tiled (expect: no Exchange beyond to_tiled's) ===")
-r = t.resample_spatial_tiled(tc, 2, "mean", impl="sql")
+r = t.resample_spatial_tiled(tc, 2, "mean")
 plan = r.df._jdf.queryExecution().executedPlan().toString()
 print("Exchanges:", plan.count("Exchange"), "| Generates:", plan.count("Generate"))
 
-print("=== aggregate_spatial_tiled (expect: Generate only on boundary branch) ===")
+print("=== aggregate_spatial_tiled (expect: no Generate, one MapInPandas) ===")
 z = t.aggregate_spatial_tiled(tc, FIXTURE_POLYGONS, "mean")
 plan2 = z.df._jdf.queryExecution().executedPlan().toString()
 print("Exchanges:", plan2.count("Exchange"), "| Generates:", plan2.count("Generate"), "| Unions:", plan2.count("Union"))

@@ -67,16 +67,13 @@ def test_zonal_tiled_many_zones(spark, m):
 
     cube = synthetic_cube(spark)
     tc = t.to_tiled(cube, tile=4, n_y=DEFAULT_SPEC.ny, n_x=DEFAULT_SPEC.nx)
-    # m=45 runs the vectorized engine (the many-zone scale path); m=15
-    # stays on auto (sql at tile=4) so both engines face a zone swarm
-    impl = "numpy" if m == 45 else "auto"
     cols = ["geom_id", "band", "time", "value"]
     want = (
         aggregate_spatial(cube, zones, "count")
         .df.toPandas()[cols].sort_values(cols[:3]).reset_index(drop=True)
     )
     got = (
-        t.aggregate_spatial_tiled(tc, zones, "count", impl=impl)
+        t.aggregate_spatial_tiled(tc, zones, "count")
         .df.toPandas()[cols].sort_values(cols[:3]).reset_index(drop=True)
     )
     assert len(want) > 0
@@ -251,10 +248,9 @@ def test_tiled_plan_build_runs_zero_spark_jobs(spark):
     assert static_scene_dims("s2_l2a") == (full.n_y, full.n_x)
 
 
-@pytest.mark.parametrize("impl", ["sql", "numpy"])
-def test_climatological_normal_tiled_matches_long(spark, impl):
+def test_climatological_normal_tiled_matches_long(spark):
     """Round-10: the r9 doc-phantom is now a real op — month-keyed mean
-    fold on tiles ≡ the long climatological_normal, both engines."""
+    fold on tiles ≡ the long climatological_normal."""
     from openeo_odc_driver_spark.operators.aggregates import (
         climatological_normal,
     )
@@ -267,7 +263,7 @@ def test_climatological_normal_tiled_matches_long(spark, impl):
         .sort_values(cols[:4]).reset_index(drop=True)
     )
     got = (
-        t.from_tiled(t.climatological_normal_tiled(tc, impl=impl))
+        t.from_tiled(t.climatological_normal_tiled(tc))
         .df.toPandas()[cols].sort_values(cols[:4]).reset_index(drop=True)
     )
     pd.testing.assert_frame_equal(want, got, check_exact=True,
@@ -361,13 +357,11 @@ def test_tiled_store_ndvi_storage_first(spark):
     assert any("GreaterThanOrEqual(time" in s for s in scans)
 
 
-@pytest.mark.parametrize("impl", ["sql", "numpy"])
-def test_resample_tiled_partial_edge_blocks(spark, impl):
+def test_resample_tiled_partial_edge_blocks(spark):
     """Round-10 ADVICE: scene dims NOT divisible by factor*tile —
     13x15 px, tile=4, factor=2 → the last row/col blocks pool only
     their in-scene pixels (1x2 / 2x1 / 1x1 slivers) and padding never
-    leaks in; pinned against an independent pandas block reference,
-    both engines."""
+    leaks in; pinned against an independent pandas block reference."""
     import numpy as np
 
     from openeo_odc_driver_spark.sources.synthetic import CubeSpec
@@ -377,7 +371,7 @@ def test_resample_tiled_partial_edge_blocks(spark, impl):
     g = cube.schema.grid
     tc = t.to_tiled(cube, tile=4, n_y=13, n_x=15)
     out = (
-        t.from_tiled(t.resample_spatial_tiled(tc, 2, "mean", impl=impl))
+        t.from_tiled(t.resample_spatial_tiled(tc, 2, "mean"))
         .df.toPandas()
     )
     assert (t.resample_spatial_tiled(tc, 2, "mean").n_y,
@@ -400,13 +394,12 @@ def test_resample_tiled_partial_edge_blocks(spark, impl):
     )
 
 
-@pytest.mark.parametrize("impl", ["sql", "numpy"])
-def test_zonal_tiled_concave_native(spark, impl):
+def test_zonal_tiled_concave_native(spark):
     """Round-10: concave polygons natively on tiles — the long operator
     switches ALL polygons to the even-odd ray-cast rule when any is
     concave, and the tiled crossing test mirrors its float arithmetic
     bit-for-bit. L-shape (notch excluded) + overlapping rectangle,
-    first-match, every reducer class, both engines."""
+    first-match, every reducer class."""
     from openeo_odc_driver_spark.operators.aggregates import aggregate_spatial
 
     ell = [
@@ -424,7 +417,7 @@ def test_zonal_tiled_concave_native(spark, impl):
             .df.toPandas()[cols].sort_values(cols[:3]).reset_index(drop=True)
         )
         got = (
-            t.aggregate_spatial_tiled(tc, zones, reducer, impl=impl)
+            t.aggregate_spatial_tiled(tc, zones, reducer)
             .df.toPandas()[cols].sort_values(cols[:3]).reset_index(drop=True)
         )
         pd.testing.assert_frame_equal(
@@ -546,11 +539,19 @@ def test_zonal_tiled_prunes_stored_scan(spark, tmp_path):
         store,
     )
     tc = t.load_tiled(spark, store)
-    out = t.aggregate_spatial_tiled(tc, FIXTURE_POLYGONS, "count", impl="sql")
-    plan = out.df._jdf.queryExecution().executedPlan().toString()
-    scans = re.findall(r"PushedFilters: \[[^\]]*\]", plan)
+    out = t.aggregate_spatial_tiled(tc, FIXTURE_POLYGONS, "count")
+    # the default 100-char metadata cut would hide the tile_row bounds
+    key = "spark.sql.maxMetadataStringLength"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "10000")
+    try:
+        plan = out.df._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set(key, old)
+    scans = re.findall(r"PushedFilters: \[[^\]\n]*\]", plan)
     assert scans and any(
-        "tile_row" in f and "tile_col" in f and "GreaterThanOrEqual" in f
+        "GreaterThanOrEqual(tile_row" in f
+        and "GreaterThanOrEqual(tile_col" in f
         for f in scans
     ), scans
     cols = ["geom_id", "band", "time", "value"]
@@ -563,11 +564,10 @@ def test_zonal_tiled_prunes_stored_scan(spark, tmp_path):
 
 
 @pytest.mark.parametrize("reducer", ["sd", "variance"])
-@pytest.mark.parametrize("impl", ["sql", "numpy"])
-def test_tiled_reduce_time_sd_variance_matches_long(spark, reducer, impl):
+def test_tiled_reduce_time_sd_variance_matches_long(spark, reducer):
     """Round-10: sd/variance close the tiled named-time-reducer set —
-    exact (n, Σx, Σx²) element-wise folds, both engines, pinned
-    frame-exact against the long reducer."""
+    exact (n, Σx, Σx²) element-wise folds, pinned frame-exact against
+    the long reducer."""
     from openeo_odc_driver_spark.operators.reducers import reduce_dimension
 
     cube = synthetic_cube(spark)
@@ -581,7 +581,7 @@ def test_tiled_reduce_time_sd_variance_matches_long(spark, reducer, impl):
             t.reduce_time_tiled(
                 t.to_tiled(cube, tile=4, n_y=DEFAULT_SPEC.ny,
                            n_x=DEFAULT_SPEC.nx),
-                reducer, impl=impl,
+                reducer,
             )
         ).df.toPandas()[cols].sort_values(cols[:3]).reset_index(drop=True)
     )
@@ -605,7 +605,7 @@ def test_tiled_period_sd_matches_long(spark):
             t.aggregate_temporal_period_tiled(
                 t.to_tiled(cube, tile=4, n_y=DEFAULT_SPEC.ny,
                            n_x=DEFAULT_SPEC.nx),
-                "month", "sd", impl="sql",
+                "month", "sd",
             )
         ).df.toPandas()[cols].sort_values(cols[:4]).reset_index(drop=True)
     )

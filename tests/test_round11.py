@@ -266,10 +266,11 @@ def test_resample_nonuniform_stride_demotes_not_errors(spark):
 # --- x/y reducers, period median, zonal product on tiles ---------------------
 
 
+# id kept stable for test history: one engine now, checked against long
 def test_reduce_spatial_tiled_engines_match_long(spark):
-    """Both physical engines of the spatial-axis reducers reproduce the
-    long reduce_dimension exactly — partial tiles (tile=5) under numpy,
-    aligned tiles under sql, every partial-foldable reducer."""
+    """The spatial-axis reducers reproduce the long reduce_dimension
+    exactly on aligned (tile=8) and partial (tile=5) tiles, every
+    partial-foldable reducer."""
     from openeo_odc_driver_spark.operators.reducers import reduce_dimension
 
     src = synthetic_cube(spark)
@@ -278,12 +279,8 @@ def test_reduce_spatial_tiled_engines_match_long(spark):
     for dim in ("x", "y"):
         for red in ("mean", "sum", "min", "max", "count", "sd", "variance"):
             long_df = reduce_dimension(src, dim, red).df
-            _frames_equal(
-                long_df, t.reduce_spatial_tiled(tc8, dim, red, impl="sql").df
-            )
-            _frames_equal(
-                long_df, t.reduce_spatial_tiled(tc5, dim, red, impl="numpy").df
-            )
+            for tc in (tc8, tc5):
+                _frames_equal(long_df, t.reduce_spatial_tiled(tc, dim, red).df)
 
 
 def test_reduce_spatial_tiled_rejects_unknown(spark):
@@ -310,6 +307,7 @@ def test_aggregate_period_median_tiled_matches_long(spark):
         _frames_equal(long_df, t.from_tiled(tiled).df)
 
 
+# id kept stable for test history: one engine now, checked against long
 def test_zonal_product_tiled_engines_match_long(spark):
     from openeo_odc_driver_spark.operators.aggregates import aggregate_spatial
 
@@ -319,10 +317,9 @@ def test_zonal_product_tiled_engines_match_long(spark):
     ]
     src = synthetic_cube(spark)
     long_df = aggregate_spatial(src, polys, "product").df
-    for impl, tile in (("sql", 8), ("numpy", 5)):
+    for tile in (8, 5):
         tiled_df = t.aggregate_spatial_tiled(
             t.to_tiled(src, tile=tile, n_y=16, n_x=16), polys, "product",
-            impl=impl,
         ).df
         _frames_equal(long_df, tiled_df)
 
@@ -768,17 +765,16 @@ def test_apply_dimension_quantiles_graph_stays_tiled(spark):
 
 def test_reduce_spatial_multiset_tiled_matches_long(spark):
     """x/y median and product ride the compact line-multiset path —
-    both engines, partial tiles, exact against the long reducers."""
+    aligned and partial tiles, exact against the long reducers."""
     from openeo_odc_driver_spark.operators.reducers import reduce_dimension
 
     src = synthetic_cube(spark)
     for dim in ("x", "y"):
         for red in ("median", "product"):
             long_df = reduce_dimension(src, dim, red).df
-            for impl, tile in (("sql", 8), ("numpy", 5)):
+            for tile in (8, 5):
                 tiled = t.reduce_spatial_tiled(
-                    t.to_tiled(src, tile=tile, n_y=16, n_x=16),
-                    dim, red, impl=impl,
+                    t.to_tiled(src, tile=tile, n_y=16, n_x=16), dim, red,
                 )
                 _frames_equal(long_df, tiled.df)
 
@@ -916,10 +912,10 @@ def test_quantiles_spatial_tiled_matches_long(spark):
     src = synthetic_cube(spark)
     for dim in ("x", "y"):
         long_df = quantiles(src, dim, probabilities=[0.25, 0.5, 0.75]).df
-        for impl, tile in (("sql", 8), ("numpy", 5)):
+        for tile in (8, 5):
             tiled = t.quantiles_spatial_tiled(
                 t.to_tiled(src, tile=tile, n_y=16, n_x=16),
-                dim, probabilities=[0.25, 0.5, 0.75], impl=impl,
+                dim, probabilities=[0.25, 0.5, 0.75],
             )
             _frames_equal(long_df, tiled.df)
     _frames_equal(

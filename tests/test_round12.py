@@ -105,42 +105,51 @@ def test_retile_same_edge_jvm_matches_python(spark, row0, col0, n_y, n_x):
     pd.testing.assert_frame_equal(a, b, check_exact=True)
 
 
+# id kept stable for test history: to_tiled has one engine now; this
+# checks its scatter against an independent pandas pack
 def test_to_tiled_numpy_impl_matches_sql(spark):
-    """to_tiled's scale engine (numpy position scatter) is row-identical
-    to the sql HOF assembly the oracles pin — including NULL cells,
-    edge-tile padding, and the duplicate-pixel named error."""
+    """to_tiled's position scatter matches an independent pandas pack of
+    the long cube — including NULL cells, edge-tile padding, and the
+    duplicate-pixel named error."""
     import pandas as pd
     import pytest as _pt
 
     from openeo_odc_driver_spark.core import tiled as t
     from openeo_odc_driver_spark.sources.synthetic import synthetic_cube
 
+    T = 5
     cube = synthetic_cube(spark)
-    a = t.to_tiled(cube, tile=5, n_y=16, n_x=16, impl="numpy").df
-    b = t.to_tiled(cube, tile=5, n_y=16, n_x=16, impl="sql").df
+    g = cube.schema.grid
     cols = ["band", "time", "tile_row", "tile_col"]
-    pa = a.toPandas().sort_values(cols).reset_index(drop=True)
-    pb = b.toPandas().sort_values(cols).reset_index(drop=True)
-    pd.testing.assert_frame_equal(pa, pb, check_exact=True)
+    got = (
+        t.to_tiled(cube, tile=T, n_y=16, n_x=16).df.toPandas()
+        .sort_values(cols).reset_index(drop=True)
+    )
+    longp = cube.df.toPandas()
+    yi = np.rint((g.y0 - longp["y"]) / g.resy).astype(int)
+    xi = np.rint((longp["x"] - g.x0) / g.resx).astype(int)
+    longp["tile_row"], longp["tile_col"] = yi // T, xi // T
+    longp["_pos"] = (yi % T) * T + xi % T
+    want = []
+    for key, grp in longp.groupby(cols, sort=True):
+        arr = np.full(T * T, np.nan)
+        arr[grp["_pos"].to_numpy()] = grp["value"].to_numpy(dtype="float64")
+        want.append((key, arr))
+    assert len(got) == len(want)
+    for (key, arr), row in zip(want, got.itertuples(index=False)):
+        assert tuple(getattr(row, c) for c in cols) == key
+        data = np.array([np.nan if v is None else v for v in row.data],
+                        dtype="float64")
+        np.testing.assert_array_equal(data, arr)
 
-    # duplicate pixel keys raise the same named error in both engines
+    # duplicate pixel keys raise the named error
     dup = cube.df.unionAll(cube.df.limit(1))
     from openeo_odc_driver_spark.core.cube import Cube
 
-    for impl in ("numpy", "sql"):
-        with _pt.raises(Exception, match="duplicate pixel keys"):
-            t.to_tiled(
-                Cube(dup, cube.schema), tile=5, n_y=16, n_x=16, impl=impl
-            ).df.collect()
-
-
-def test_to_tiled_auto_picks_numpy_at_scale_tiles():
-    """The dispatch constant: tile=256 -> numpy, fixture tiles -> sql
-    (the oracle-pinned path)."""
-    from openeo_odc_driver_spark.core.tiled import TILE_VECTORIZE_CELLS
-
-    assert 256 * 256 >= TILE_VECTORIZE_CELLS
-    assert 8 * 8 < TILE_VECTORIZE_CELLS
+    with _pt.raises(Exception, match="duplicate pixel keys"):
+        t.to_tiled(
+            Cube(dup, cube.schema), tile=T, n_y=16, n_x=16
+        ).df.collect()
 
 
 def test_band_quantiles_stay_tiled(spark):
@@ -182,7 +191,7 @@ def test_band_quantiles_stay_tiled(spark):
     pd.testing.assert_frame_equal(a, b, check_exact=True, check_dtype=False)
 
 
-# --- numpy twin of the band-expression compiler (round 12) -------------------
+# --- band-expression reducer on tiles vs the long tier ----------------------
 
 
 def _band_graph(pid_tree):
@@ -242,65 +251,47 @@ _TWIN_GRAPHS = {
 }
 
 
+# id kept stable for test history: the numpy twin is gone; this checks
+# the tiled band expression against the long _reduce_bands_expression
 @pytest.mark.parametrize("name", sorted(_TWIN_GRAPHS))
 def test_band_expr_numpy_twin_matches_sql(spark, name):
-    """Every numpy-twin primitive against the zip_with/transform engine
-    it replaces, on the fixture's mixed data (negatives, zeros, ~4%
-    NULLs): exact frame equality. Pins the empirically-verified
-    non-ANSI corners — x/0 → NULL, ln/log(≤0) → NULL, clip(NULL) → lo,
-    mod via composed floor-divide."""
-    import pandas as pd
-
-    from openeo_odc_driver_spark.core.tiled import to_tiled, from_tiled
-    from openeo_odc_driver_spark.plans.graph import (
-        _reduce_bands_expression_tiled,
-    )
-    from openeo_odc_driver_spark.sources.synthetic import synthetic_cube
-
-    child = _band_graph(_TWIN_GRAPHS[name])
-    tc = to_tiled(synthetic_cube(spark), tile=8, n_y=16, n_x=16)
-    a = from_tiled(
-        _reduce_bands_expression_tiled(tc, child, impl="numpy")
-    ).df
-    b = from_tiled(
-        _reduce_bands_expression_tiled(tc, child, impl="sql")
-    ).df
-    cols = sorted(a.columns)
-    pa = a.toPandas()[cols].sort_values(cols).reset_index(drop=True)
-    pb = b.toPandas()[cols].sort_values(cols).reset_index(drop=True)
-    pd.testing.assert_frame_equal(pa, pb, check_exact=True)
+    """Every band-expression primitive on tiles against the long
+    _reduce_bands_expression, on the fixture's mixed data (negatives,
+    zeros, ~4% NULLs): exact frame equality. Pins the non-ANSI corners
+    — x/0 → NULL, clip(NULL) → lo, mod via composed floor-divide."""
+    _assert_band_expr_tiers_equal(spark, _band_graph(_TWIN_GRAPHS[name]))
 
 
+# id kept stable for test history: no twin and no fallback remain; this
+# checks transcendental band expressions, tiled against long
 def test_band_expr_twin_unsupported_falls_back(spark):
-    """sqrt produces NaN VALUES from valid inputs (sqrt(−1)) — outside
-    the twin's NaN≡NULL subset — so auto dispatch at a scale tile must
-    fall back to the sql engine, never error, and stay exact."""
-    import pandas as pd
-
-    from openeo_odc_driver_spark.core.tiled import to_tiled, from_tiled
-    from openeo_odc_driver_spark.plans.graph import (
-        _TwinUnsupported,
-        _compile_expr_numpy,
-        _reduce_bands_expression_tiled,
-    )
-    from openeo_odc_driver_spark.sources.synthetic import synthetic_cube
-
-    # sqrt (NaN values from valid inputs) and ALL transcendentals
-    # (last-ulp libm/JVM divergence - measured on ln(1.25)) are out
+    """Transcendentals on tiles (sqrt of negatives, ln, log, exp,
+    arctan) go through the same Column builders as the long tier, so
+    the tiers agree exactly — libm would differ from the JVM in the
+    last ulp (ln(1.25)), which is why the band expression has no numpy
+    evaluator."""
     for tree in (("sqrt", ("add", "B04", "B08")), ("ln", "B04"),
                  ("log", ("absolute", "B08"), 10.0),
                  ("arctan", ("exp", ("multiply", "B04", 0.25)))):
-        with pytest.raises(_TwinUnsupported):
-            _compile_expr_numpy(_band_graph(tree), {"data": lambda a: 0.0})
-    child = _band_graph(("sqrt", ("add", "B04", "B08")))
-    tc = to_tiled(synthetic_cube(spark), tile=8, n_y=16, n_x=16)
-    a = from_tiled(
-        _reduce_bands_expression_tiled(tc, child, impl="numpy")
-    ).df  # falls back internally
-    b = from_tiled(
-        _reduce_bands_expression_tiled(tc, child, impl="sql")
-    ).df
+        _assert_band_expr_tiers_equal(spark, _band_graph(tree))
+
+
+def _assert_band_expr_tiers_equal(spark, child):
+    import pandas as pd
+
+    from openeo_odc_driver_spark.core.tiled import to_tiled, from_tiled
+    from openeo_odc_driver_spark.plans.graph import (
+        _reduce_bands_expression,
+        _reduce_bands_expression_tiled,
+    )
+    from openeo_odc_driver_spark.sources.synthetic import synthetic_cube
+
+    cube = synthetic_cube(spark)
+    tc = to_tiled(cube, tile=8, n_y=16, n_x=16)
+    a = from_tiled(_reduce_bands_expression_tiled(tc, child)).df
+    b = _reduce_bands_expression(cube, child).df
     cols = sorted(a.columns)
+    assert cols == sorted(b.columns)
     pa = a.toPandas()[cols].sort_values(cols).reset_index(drop=True)
     pb = b.toPandas()[cols].sort_values(cols).reset_index(drop=True)
     pd.testing.assert_frame_equal(pa, pb, check_exact=True)

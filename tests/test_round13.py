@@ -326,22 +326,26 @@ def test_planner_resample_spatial_projection(spark):
     assert out.df.count() > 0
 
 
+# id kept stable for test history: to_tiled has one engine now; this
+# checks a NaN-bearing cube packs exactly like the same cube with NULLs
 def test_to_tiled_nan_folds_to_null_both_engines(spark):
     """Tiled-boundary convention (round 13): a float NaN input VALUE
-    folds to NULL on pack in BOTH engines — the Arrow float64 transfer
-    cannot distinguish NaN from NULL, so the sql HOF folds explicitly
-    to stay bit-exact with the numpy scatter."""
+    folds to NULL on pack — the packed array's only missing-value
+    representation is NULL, so a NaN-bearing cube packs exactly like
+    the same cube with those cells NULL."""
     from pyspark.sql import functions as F
 
     src = synthetic_cube(spark)
-    df = src.df.withColumn(
-        "value",
-        F.when((F.col("x") < 20) & F.col("value").isNotNull(),
-               F.lit(float("nan"))).otherwise(F.col("value")),
+    hit = (F.col("x") < 20) & F.col("value").isNotNull()
+    nan_df = src.df.withColumn(
+        "value", F.when(hit, F.lit(float("nan"))).otherwise(F.col("value")),
     )
-    cube = Cube(df, src.schema)
-    a = t.to_tiled(cube, tile=8, n_y=16, n_x=16, impl="sql")
-    b = t.to_tiled(cube, tile=8, n_y=16, n_x=16, impl="numpy")
+    null_df = src.df.withColumn(
+        "value", F.when(hit, F.lit(None).cast("double"))
+        .otherwise(F.col("value")),
+    )
+    a = t.to_tiled(Cube(nan_df, src.schema), tile=8, n_y=16, n_x=16)
+    b = t.to_tiled(Cube(null_df, src.schema), tile=8, n_y=16, n_x=16)
     keys = ["band", "time", "tile_row", "tile_col"]
     pa = a.df.toPandas().sort_values(keys).reset_index(drop=True)
     pb = b.df.toPandas().sort_values(keys).reset_index(drop=True)

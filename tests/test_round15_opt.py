@@ -82,7 +82,7 @@ def test_numpy_fold_permutation_invariant(spark):
 
     def run(df_variant):
         out = _fold_groups(
-            replace(nd, df=df_variant), "sum", "numpy", keys=keys,
+            replace(nd, df=df_variant), "sum", keys=keys,
             sort_field="time",
         )
         return sorted(map(tuple, out.collect()))

@@ -281,22 +281,20 @@ def test_tiled_time_mean_matches_long_reducer(spark):
         .sort_values(cols[:3]).reset_index(drop=True)
     )
     tc = t.to_tiled(cube, tile=7)
-    for impl in ("sql", "numpy"):
-        tiled = (
-            t.from_tiled(t.reduce_time_mean_tiled(tc, impl=impl))
-            .df.toPandas()[cols].sort_values(cols[:3]).reset_index(drop=True)
-        )
-        pd.testing.assert_frame_equal(long, tiled, check_exact=True)
+    tiled = (
+        t.from_tiled(t.reduce_time_mean_tiled(tc))
+        .df.toPandas()[cols].sort_values(cols[:3]).reset_index(drop=True)
+    )
+    pd.testing.assert_frame_equal(long, tiled, check_exact=True)
     import pytest
 
-    with pytest.raises(ValueError, match="impl"):
-        t.reduce_time_mean_tiled(tc, impl="nope")
     with pytest.raises(ValueError, match="reducer"):
         t.reduce_time_tiled(tc, "median")
 
 
+# id kept stable for test history: one engine now, checked against long
 def test_tiled_reducers_match_long_across_engines(spark):
-    """sum/min/max per pixel: sql fold == numpy fold == the long
+    """sum/min/max per pixel: the tiled numpy fold == the long
     relational reducer, including NULL-skip and all-NULL → NULL."""
     import pandas as pd
 
@@ -313,15 +311,12 @@ def test_tiled_reducers_match_long_across_engines(spark):
             reduce_dimension(cube, "time", red).df.toPandas()[cols]
             .sort_values(cols[:3]).reset_index(drop=True)
         )
-        for impl in ("sql", "numpy"):
-            tiled = (
-                t.from_tiled(t.reduce_time_tiled(tc, red, impl=impl))
-                .df.toPandas()[cols].sort_values(cols[:3])
-                .reset_index(drop=True)
-            )
-            pd.testing.assert_frame_equal(
-                long, tiled, check_exact=True,
-            ), f"{red}/{impl}"
+        tiled = (
+            t.from_tiled(t.reduce_time_tiled(tc, red))
+            .df.toPandas()[cols].sort_values(cols[:3])
+            .reset_index(drop=True)
+        )
+        pd.testing.assert_frame_equal(long, tiled, check_exact=True)
 
 
 def test_tiled_kernel_matches_long_scatter(spark):
@@ -534,6 +529,7 @@ def test_tiled_mask_matches_long_including_replacement(spark):
     pd.testing.assert_frame_equal(mixed, same, check_exact=True)
 
 
+# id kept stable for test history: one engine now, checked against long
 def test_tiled_temporal_period_matches_long_across_engines(spark):
     """Calendar-period resample on tiles ≡ the long operator for both
     fold engines and two (period, reducer) combos, and the time-axis
@@ -554,15 +550,12 @@ def test_tiled_temporal_period_matches_long_across_engines(spark):
             aggregate_temporal_period(cube, period, red).df.toPandas()[cols]
             .sort_values(cols[:4]).reset_index(drop=True)
         )
-        for impl in ("sql", "numpy"):
-            got_tc = t.aggregate_temporal_period_tiled(
-                tc, period, red, impl=impl
-            )
-            got = (
-                t.from_tiled(got_tc).df.toPandas()[cols]
-                .sort_values(cols[:4]).reset_index(drop=True)
-            )
-            pd.testing.assert_frame_equal(long, got, check_exact=True)
+        got_tc = t.aggregate_temporal_period_tiled(tc, period, red)
+        got = (
+            t.from_tiled(got_tc).df.toPandas()[cols]
+            .sort_values(cols[:4]).reset_index(drop=True)
+        )
+        pd.testing.assert_frame_equal(long, got, check_exact=True)
     season = t.aggregate_temporal_period_tiled(tc, "season", "max")
     assert season.schema.time_axis is not None
     assert len(season.schema.time_axis) == 8  # 24 months -> 8 quarters
@@ -586,12 +579,11 @@ def test_tiled_band_reduction_matches_long(spark):
         reduce_dimension(cube, "bands", "mean").df.toPandas()[cols]
         .sort_values(cols[:3]).reset_index(drop=True)
     )
-    for impl in ("sql", "numpy"):
-        got = (
-            t.from_tiled(t.reduce_bands_tiled(tc, "mean", impl=impl))
-            .df.toPandas()[cols].sort_values(cols[:3]).reset_index(drop=True)
-        )
-        pd.testing.assert_frame_equal(long, got, check_exact=True)
+    got = (
+        t.from_tiled(t.reduce_bands_tiled(tc, "mean"))
+        .df.toPandas()[cols].sort_values(cols[:3]).reset_index(drop=True)
+    )
+    pd.testing.assert_frame_equal(long, got, check_exact=True)
     import pytest
 
     flat = t.reduce_bands_tiled(tc)

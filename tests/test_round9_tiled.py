@@ -153,22 +153,19 @@ def test_merge_tiled_resolver_sees_null_partner_for_missing_tile(spark):
     )
 
 
+# id kept stable for test history: resample_spatial_tiled has one
+# engine now; this checks it against a pandas block reference
 @pytest.mark.parametrize("reducer", ["mean", "sum", "min", "max"])
 def test_resample_tiled_sql_numpy_parity_and_block_semantics(spark, reducer):
-    """sql and numpy engines agree bit-for-bit, and the block reduction
-    matches a pandas reference computation on the long cube."""
+    """The block reduction matches a pandas reference computation on the
+    long cube, bit-for-bit."""
     import numpy as np
 
     cube = synthetic_cube(spark)  # 16x16, dyadic values, ~4% NULLs
     tc = t.to_tiled(cube, tile=8)
-    a = t.from_tiled(
-        t.resample_spatial_tiled(tc, 2, reducer, impl="sql")
-    ).df
-    b = t.from_tiled(
-        t.resample_spatial_tiled(tc, 2, reducer, impl="numpy")
-    ).df
-    pa, pb = _long_sorted(a), _long_sorted(b)
-    pd.testing.assert_frame_equal(pa, pb, check_exact=True)
+    pa = _long_sorted(
+        t.from_tiled(t.resample_spatial_tiled(tc, 2, reducer)).df
+    )
     # brute-force reference: block-reduce the long cube in pandas
     longp = cube.df.toPandas()
     g = cube.schema.grid
@@ -212,12 +209,12 @@ def test_resample_tiled_error_contracts_and_grid(spark):
         t.resample_spatial_tiled(tc, 3)
     with pytest.raises(ValueError, match="reducer"):
         t.resample_spatial_tiled(tc, 2, "median")
-    out = t.resample_spatial_tiled(tc, 4, "mean", impl="sql")
+    out = t.resample_spatial_tiled(tc, 4, "mean")
     assert out.tile == 2 and (out.n_y, out.n_x) == (4, 4)
     assert out.schema.grid.resx == cube.schema.grid.resx * 4
     # nearest = upper-left sample of each block
     near = t.from_tiled(
-        t.resample_spatial_tiled(tc, 2, "nearest", impl="sql")
+        t.resample_spatial_tiled(tc, 2, "nearest")
     ).df
     longp = cube.df.toPandas()
     g = cube.schema.grid
@@ -286,23 +283,29 @@ def test_zonal_tiled_classifies_interior_tiles(spark):
     # parity pinned in test_round10.test_zonal_tiled_concave_native
 
 
+# id kept stable for test history: aggregate_spatial_tiled has one
+# engine now; this checks padded edge tiles against the long operator
 @pytest.mark.parametrize("reducer", ["mean", "sum", "min", "max", "count"])
 def test_zonal_tiled_numpy_engine_matches_sql(spark, reducer):
-    """The vectorized interior-fold engine (scale path) is pinned
-    element-exact against the interpreted SQL fold (oracle mode) on the
-    dyadic fixture — the reduce_time_tiled dispatch discipline."""
+    """The zonal engine on PARTIAL tiles (tile=5 on the 16x16 fixture:
+    padded edge tiles, zones straddling tile seams) is element-exact
+    against the long aggregate_spatial — padding cells must never be
+    tagged or folded."""
     from openeo_odc_driver_spark.functions.geometry import FIXTURE_POLYGONS
+    from openeo_odc_driver_spark.operators.aggregates import aggregate_spatial
 
     cube = synthetic_cube(spark)
-    tc = t.to_tiled(cube, tile=4)
+    tc = t.to_tiled(cube, tile=5, n_y=16, n_x=16)
     cols = ["geom_id", "band", "time", "value"]
-    frames = []
-    for impl in ("sql", "numpy"):
-        frames.append(
-            t.aggregate_spatial_tiled(
-                tc, FIXTURE_POLYGONS, reducer, impl=impl
-            ).df.toPandas()[cols].sort_values(cols[:3]).reset_index(drop=True)
-        )
+    want = (
+        aggregate_spatial(cube, FIXTURE_POLYGONS, reducer)
+        .df.toPandas()[cols].sort_values(cols[:3]).reset_index(drop=True)
+    )
+    got = (
+        t.aggregate_spatial_tiled(tc, FIXTURE_POLYGONS, reducer)
+        .df.toPandas()[cols].sort_values(cols[:3]).reset_index(drop=True)
+    )
+    assert len(want) > 0
     pd.testing.assert_frame_equal(
-        frames[0], frames[1], check_exact=True, check_dtype=False
+        want, got, check_exact=True, check_dtype=False
     )

@@ -45,6 +45,38 @@ def test_post_bad_graph_returns_openeo_error(client):
     assert r.get_json()["code"] == "NotImplementedError"
 
 
+@pytest.mark.parametrize("bad", [
+    {"id": "../escaped"},
+    {"id": "/tmp/openeo-escaped-abs"},
+    {"id": "a" * 65},
+    {"id": 7},
+    {"tile": "abc"},
+    {"tile": None},
+    {"tile": 0},
+    {"tile": float("inf")},
+    {"tile": 2.5},
+    {"tile": True},
+])
+def test_post_bad_id_or_tile_returns_openeo_400(spark, tmp_path, bad):
+    """A client id names the job directory and tile sizes the pack: both
+    are checked before anything touches the disk, and a bad value is a
+    400 in the openEO error shape, never a 500 or a write outside
+    work_dir."""
+    from openeo_odc_driver_spark.service import create_app
+
+    work = tmp_path / "svc"
+    app = create_app(spark, work_dir=str(work))
+    app.config["TESTING"] = True
+    r = app.test_client().post("/graph", json={**_graph(), **bad})
+    assert r.status_code == 400
+    body = r.get_json()
+    assert set(body) == {"id", "code", "message"}
+    assert body["code"] == "InvalidRequest"
+    assert not (work / "escaped").exists()
+    assert not os.path.exists("/tmp/openeo-escaped-abs")
+    assert not (work / "jobs").exists()
+
+
 def test_collections_stac_shape(client):
     r = client.get("/collections")
     cols = {c["id"]: c for c in r.get_json()["collections"]}
