@@ -902,6 +902,8 @@ def quantiles_spatial_tiled(
     with the long operator's exact ``percentile(value, array(...))`` +
     prob explode, so the interpolation rounds identically. Emits a
     long cube with a ``prob`` column, one row per (line, prob)."""
+    from ..operators.reducers import quantile_values
+
     if (probabilities is None) == (q is None):
         raise ValueError("exactly one of probabilities/q required")
     if q is not None:
@@ -930,7 +932,8 @@ def quantiles_spatial_tiled(
                 F.explode_outer("_vals").alias(VALUE))
         .groupBy(*keys, kept)
         .agg(F.expr(f"percentile({VALUE}, array({arr}))").alias("_qs"))
-        .select(*keys, kept, F.posexplode("_qs").alias("_i", VALUE))
+        .select(*keys, kept,
+                F.posexplode(quantile_values("_qs", probs)).alias("_i", VALUE))
         .withColumn(
             "prob", F.element_at(F.lit(probs), F.col("_i") + 1)
         )
@@ -1687,10 +1690,7 @@ def apply_kernel_tiled_layout(
             f"kernel radius ({max(ry, rx)}) exceeds tile ({T}); "
             "halo exchange covers one neighbor ring"
         )
-    if TIME in tc.schema.dims:
-        keys = [BAND, TIME]
-    else:
-        keys = [BAND]
+    keys = tc.key_dims
     kmat = np.array([[float(w) for w in row] for row in kernel])
     fac = float(factor)
     pieces = _halo_pieces(tc, keys, ry, rx, wrap=wrap_mode)

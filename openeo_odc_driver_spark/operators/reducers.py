@@ -105,6 +105,17 @@ def reduce_dimension(cube: Cube, dimension: str, reducer: str) -> Cube:
     return Cube(out, cube.schema.drop(dim) if dim != "band" else cube.schema.drop(dim).with_bands(()))
 
 
+def quantile_values(qs: str, probs: Sequence[float]) -> Column:
+    """The ``percentile(value, array(probs))`` column ``qs`` with an
+    all-NULL group's NULL answer widened to one NULL per probability, so
+    the explode emits NULL cells for it (as numpy ``nanpercentile`` on
+    tiles and the DuckDB ``quantile_cont`` oracle do) instead of no
+    rows."""
+    return F.coalesce(
+        F.col(qs), F.array_repeat(F.lit(None).cast("double"), len(probs))
+    )
+
+
 def quantiles(
     cube: Cube,
     dimension: str,
@@ -130,7 +141,7 @@ def quantiles(
         .agg(agg)
         .select(
             *group,
-            F.posexplode("_qs").alias("_i", VALUE),
+            F.posexplode(quantile_values("_qs", probs)).alias("_i", VALUE),
         )
         .withColumn("prob", F.element_at(F.lit(probs), F.col("_i") + 1))
         .drop("_i")

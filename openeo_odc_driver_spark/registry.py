@@ -2795,8 +2795,9 @@ def _pg_ndvi_tiers_sweep(spark, sf_dir):
 def _pg_masked_seasonal_tiled(spark, sf_dir):
     """The masked-seasonal graph in tiled mode: band-expression mask
     build, mask, calendar resample, and apply(clip) ALL stay on tiles
-    (plans/graph.py: _dispatch_tiled), against the long oracle. The
-    widest tile-resident chain the planner currently executes."""
+    (plans/graph.py: the PROCESSES table's tiled functions), against
+    the long oracle. The widest tile-resident chain the planner
+    currently executes."""
     from .plans.graph import ProcessGraph
 
     pg = ProcessGraph.from_file(

@@ -265,21 +265,13 @@ def create_app(spark: SparkSession, work_dir: str = "/tmp/spark_graft_service",
 
     @app.get("/processes")
     def processes():
-        """openEO discovery: the process ids the planner executes (node
-        dispatch + expression compiler), derived from the dispatch tables
-        rather than hand-maintained."""
-        from .plans.graph import _BINARY, _UNARY
+        """openEO discovery: the process ids the planner executes — the
+        node processes of its process table (``plans.graph.PROCESSES``)
+        and the processes its expression compiler and reducers accept
+        inside child graphs."""
+        from .plans.graph import _BINARY, _UNARY, PROCESSES
         from .operators.reducers import REDUCERS
 
-        node_ops = [
-            "load_collection", "load_result", "save_result",
-            "reduce_dimension", "apply", "apply_dimension", "filter_bands",
-            "filter_temporal", "filter_bbox", "filter_spatial", "mask",
-            "merge_cubes", "aggregate_temporal_period", "aggregate_spatial",
-            "apply_kernel", "resample_spatial", "resample_cube_temporal",
-            "resample_cube_spatial", "add_dimension", "rename_labels",
-            "climatological_normal", "anomaly", "array_interpolate_linear",
-        ]
         expr_ops = sorted(
             set(_BINARY) | set(_UNARY)
             | {"array_element", "pi", "clip", "linear_scale_range", "if",
@@ -289,7 +281,8 @@ def create_app(spark: SparkSession, work_dir: str = "/tmp/spark_graft_service",
         return jsonify(
             {
                 "processes": [
-                    {"id": p, "categories": ["cubes"]} for p in node_ops
+                    {"id": p, "categories": ["cubes"]}
+                    for p in sorted(PROCESSES)
                 ]
                 + [{"id": p, "categories": ["math"]} for p in expr_ops],
                 "links": [],

@@ -564,7 +564,10 @@ def test_radar_mask_planner_stays_tiled(spark):
     # the synthetic collection lacks DEM/LIA bands — swap band labels so
     # the operator finds them (schema-level rename via the catalog is
     # overkill for a dispatch pin; use the SAR fixture directly instead)
-    from openeo_odc_driver_spark.plans.graph import ProcessGraph as PG
+    from openeo_odc_driver_spark.plans.graph import (
+        PROCESSES,
+        ProcessGraph as PG,
+    )
 
     pg = PG(graph, tiled=True, tile=8, save_dir="/tmp/pg_rm")
     # dispatch reached the tiled branch iff radar_mask is NOT demoted;
@@ -572,10 +575,8 @@ def test_radar_mask_planner_stays_tiled(spark):
     # dispatch on the SAR fixture through the operator call instead
     sar = CubeSpec(bands=("DEM", "LIA"), n_times=1, vs=0.0)
     tc = t.to_tiled(synthetic_cube(spark, sar), tile=8, n_y=16, n_x=16)
-    out = pg._dispatch_tiled(
-        "radar_mask",
-        {"data": tc, "foreshortening_th": 0.3, "layover_th": 0.5},
-        {},
+    out = PROCESSES["radar_mask"].tiled(
+        pg, {"data": tc, "foreshortening_th": 0.3, "layover_th": 0.5},
     )
     assert isinstance(out, t.TiledCube)
 

@@ -94,6 +94,12 @@ def test_processes_discovery(client):
     ids = {p["id"] for p in r.get_json()["processes"]}
     assert {"load_collection", "reduce_dimension", "median", "mod",
             "resample_spatial"} <= ids
+    # the node processes are exactly the planner's process table
+    from openeo_odc_driver_spark.plans.graph import PROCESSES
+
+    cubes = {p["id"] for p in r.get_json()["processes"]
+             if p["categories"] == ["cubes"]}
+    assert cubes == set(PROCESSES)
 
 
 def test_stop_unknown_job_404(client):
